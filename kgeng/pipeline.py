@@ -44,6 +44,8 @@ from kgeng.link.candidates import build_link_dims, link_triples
 
 SALT_BUCKETS = 16
 MAX_PUBLICATIONS = 10
+# extract fan-out: tasks per core (see stage_extract_text)
+EXTRACT_WAVES = 3
 # the linking dim tables (each its own lineage commit / Iceberg table)
 LINK_DIM_TABLES = ("alias_map", "idf", "ent", "labels", "link_map")
 
@@ -102,16 +104,14 @@ class Pipeline:
             # a row budget) — spread the UDF stage across the cluster
             # explicitly. On Iceberg this is bucket(url_hash) at the
             # table layout level instead.
-            # 12 waves of fine partitions: coarse partitioning (2 waves)
-            # turns any scheduler jitter into a straggler tail on the
-            # longest stage; finer slices let the last wave pack tight.
-            # The wave count targets ~3 s/task: it was 6 when the
-            # kernel ran ~1250 pages/s — the r7 boring-run kernel
-            # doubled that, so the same task-duration target needs 2×
-            # the slices (a coarse last wave costs its full task length
-            # in straggler tail, which lands on the scaling pair's
-            # hi-parallelism leg 4× harder than on local[1])
-            target = self.spark.sparkContext.defaultParallelism * 12
+            # 3 waves: every Python task pays a fixed start-up cost
+            # whether or not it holds rows (~0.06 CPU-s with
+            # kgeng.pyworker, ~0.22 more without), so fewer, longer
+            # tasks win. 40k-page extract alone, local[4] on 4 vCPU, min of 3
+            # per session, two sessions: 48 tasks 8.86 / 7.66 s
+            # (33.8 / 28.1 CPU-s), 12 tasks 6.87 / 7.18 s (25.1 /
+            # 26.0 CPU-s).
+            target = self.spark.sparkContext.defaultParallelism * EXTRACT_WAVES
             return pages.repartition(target, "url").select(
                 "url", "lang", extracted_text(F.col("html")).alias("text")
             )

@@ -83,17 +83,29 @@ def get_spark(
         # high local task concurrency (measured: 32-thread pandas-UDF
         # stage 72s -> 3s with TCP loopback); keep classic sockets
         .config("spark.python.unix.domain.socket.enabled", "false")
+        # pyspark.daemon with a stat-keyed zipimport refresh: each task
+        # otherwise re-reads the central directories of the archives on
+        # the worker path 16 times, ~0.22 CPU-s before its first row
+        # (see kgeng/pyworker.py)
+        .config("spark.python.daemon.module", "kgeng.pyworker")
         .config("spark.driver.memory", os.environ.get("KGENG_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if master.startswith("local-cluster"):
-        from kgeng.package import build_zip
+    # Python workers start as ``python -m kgeng.pyworker`` before any
+    # task ships code, so kgeng must be on the executors' own path: the
+    # checkout in local mode (whatever the driver's cwd), the zip that
+    # also ships via pyFiles for multi-executor masters
+    from kgeng.package import REPO, build_zip
 
-        builder = builder.config("spark.submit.pyFiles", build_zip())
+    kgeng_path = REPO
+    if master.startswith("local-cluster"):
+        kgeng_path = build_zip()
+        builder = builder.config("spark.submit.pyFiles", kgeng_path)
         builder = builder.config(
             "spark.executor.memory", os.environ.get("KGENG_EXECUTOR_MEM", "5g")
         )
+    builder = builder.config("spark.executorEnv.PYTHONPATH", kgeng_path)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -316,7 +316,10 @@ def minhash_bands(sh: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
     orders by those distinct seeds — so the sorted mh list IS
     (mh_{4b}, …, mh_{4b+3}) and the band key md5 is a per-row
     expression. Byte-identical band_key by construction; ONE shuffle
-    (the signature agg) instead of two."""
+    (the signature agg) instead of two. ``n_hashes`` must fill whole
+    bands: trailing seeds would be hashed and then dropped silently."""
+    if n_hashes % BAND_SIZE:
+        raise ValueError(f"n_hashes={n_hashes} is not a multiple of BAND_SIZE={BAND_SIZE}")
     wide = minhash_wide(sh, n_hashes)
     structs = [
         F.struct(

@@ -327,3 +327,21 @@ def test_scanner_fuzz_boring_run_boundaries():
         assert extract_text_py(h) == extract_text_py_reference(h), h
 
     check()
+
+
+def test_extract_stage_output_is_fanout_invariant(spark, pages_path, tmp_path, monkeypatch):
+    """The extract stage's fan-out is a speed choice only: the stage
+    output's (url, text) hash sum is the same at two partition counts."""
+    import pyspark.sql.functions as F
+
+    from kgeng import pipeline
+
+    def stage_hash(waves: int):
+        monkeypatch.setattr(pipeline, "EXTRACT_WAVES", waves)
+        out = pipeline.Pipeline(spark, pages_path, "", str(tmp_path / f"w{waves}"))
+        df = spark.read.parquet(out.stage_extract_text())
+        h = F.xxhash64("url", "text").cast("decimal(38,0)")
+        return df.select(F.sum(h), F.count("*")).first()
+
+    one, twelve = stage_hash(1), stage_hash(12)
+    assert one == twelve and one[1] == 1000

@@ -425,6 +425,16 @@ def test_hot_shingle_cap_keeps_pair_space_linear(spark):
     assert _jaccard_pairs(sh, 0.0).count() == n * (n - 1) / 2
 
 
+def test_minhash_bands_rejects_partial_band(spark):
+    # 6 seeds = one band of 4 + 2 seeds no band would carry
+    from kgeng.textops.dedup import BAND_SIZE, minhash_bands
+
+    sh = spark.createDataFrame([(1, "a b c")], "doc_id: long, sh: string")
+    assert minhash_bands(sh, 2 * BAND_SIZE).count() == 2
+    with pytest.raises(ValueError):
+        minhash_bands(sh, BAND_SIZE + 2)
+
+
 def test_decode_stub_fails_loudly():
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG...")
