@@ -25,8 +25,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import CPUS, HEADLINE, SF_DIR  # noqa: E402
 
 
 def main() -> None:
@@ -44,8 +43,6 @@ def main() -> None:
 
     names = args.names
     if args.all:
-        from bench import HEADLINE
-
         names = list(HEADLINE)
     unknown = [n for n in names if n not in QUERIES]
     if unknown:

