@@ -19,7 +19,7 @@ MemGraph / Apache AGE) as an idiomatic Spark DataFrame pipeline:
 - ``kgeng.textops``  — web-scale training-data ops: dedup family,
   similarity search, text quality/language analysis.
 - ``kgeng.io``       — sources/sinks + snapshot/lineage resume
-  protocol (parquet-backed, Iceberg-pluggable).
+  protocol (parquet snapshots, one JSON commit per stage).
 - ``kgeng.pipeline`` — the staged, resumable end-to-end driver.
 
 Everything here derives from public knowledge only: the Apache Spark

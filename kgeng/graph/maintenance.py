@@ -101,7 +101,6 @@ def run_degree0_delete(
         "degree0_delete",
         fp,
         row_count=n_nodes,
-        output_path=out_dir,
         metrics={
             "n_nodes_before": n_nodes_before,
             "n_edges_before": n_edges_before,

@@ -2,20 +2,15 @@
 
 The reference checkpoints its stages as pickle files and re-runs
 stages manually (``Kuzu/kuzu_build_graph_csv.py:674-731``). Here every
-pipeline stage commits a lineage row — stage name, input fingerprint,
-row count, content hash — next to its output; a re-run consults the
-log and skips any stage whose fingerprint already committed, resuming
-from the last snapshot without recomputation (BASELINE.json
-north_star).
+pipeline stage commits one lineage record — stage name, input
+fingerprint, row count, metrics — after all of its outputs are on
+disk; a re-run consults the log and skips any stage whose fingerprint
+already committed, resuming from the last snapshot without
+recomputation (BASELINE.json north_star).
 
-Backend: one tiny JSON file per commit under ``<out>/_lineage/``
-(commit files are written atomically via rename). On an Iceberg
-deployment the same three-call protocol — fingerprint, check, commit —
-runs over snapshot-summary properties instead:
-:class:`kgeng.io.iceberg.IcebergLineage` is that backend, and the
-module docstring of :mod:`kgeng.io.iceberg` is the full commit
-contract (atomic CAS commit, snapshot-isolated readers, id-based
-schema evolution, partition-spec mapping) at the 10⁹-page target.
+One tiny JSON file per commit under ``<out>/_lineage/``, written
+atomically via rename: like a Delta Lake log entry, one commit covers
+every file its stage wrote.
 """
 
 from __future__ import annotations
@@ -71,27 +66,13 @@ class LineageLog:
         return None
 
     def commit(
-        self,
-        stage: str,
-        fingerprint: str,
-        row_count: int,
-        output_path: str,
-        content_hash: str | None = None,
-        metrics: dict | None = None,
-        df=None,
+        self, stage: str, fingerprint: str, row_count: int, metrics: dict | None = None
     ) -> dict:
-        """Commit a stage. ``df`` is accepted (and ignored) so both
-        lineage backends share one signature — here the stage output is
-        already on disk at ``output_path`` by commit time, while the
-        Iceberg backend's commit IS the data append
-        (``kgeng.io.iceberg.IcebergLineage.commit``);
-        ``tests/test_iceberg.py`` holds the conformance test."""
+        """Commit a stage whose outputs are already on disk."""
         rec = {
             "stage": stage,
             "input_fingerprint": fingerprint,
             "row_count": row_count,
-            "output_path": output_path,
-            "content_hash": content_hash,
             "metrics": metrics or {},
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
@@ -100,11 +81,3 @@ class LineageLog:
             json.dump(rec, fh, indent=1)
         os.replace(tmp, self._path(stage, fingerprint))
         return rec
-
-    def entries(self) -> list[dict]:
-        out = []
-        for f in sorted(os.listdir(self.dir)):
-            if f.endswith(".json"):
-                with open(os.path.join(self.dir, f), encoding="utf-8") as fh:
-                    out.append(json.load(fh))
-        return out

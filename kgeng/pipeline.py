@@ -4,9 +4,10 @@
         --link--> curie triples --canon--> canonical triples
         --materialize--> nodes + edges tables
 
-Each stage is a separate snapshot: output parquet + a lineage commit
-(input fingerprint, row count, metrics). A re-run fingerprints its
-inputs, finds the commit, and skips straight to the next stage — the
+Each stage is a separate snapshot: its output parquet tables + one
+lineage commit (input fingerprint, row count, metrics). A re-run
+fingerprints its inputs, finds the commit, and skips straight to the
+next stage — the
 distributed replacement for the reference's pickle-checkpointed
 multi-invocation flow (``Kuzu/kuzu_build_graph_csv.py:621-753``).
 
@@ -36,13 +37,13 @@ from kgeng.graph.build import reorder_categories
 from kgeng.io.lineage import LineageLog, fingerprint_paths
 from kgeng.io.scanmeta import parquet_rows
 from kgeng.io.sinks import write_partitioned
-from kgeng.link.candidates import build_link_dims, link_triples
+from kgeng.link.candidates import build_link_dims, link_map, link_triples
 
 SALT_BUCKETS = 16
 MAX_PUBLICATIONS = 10
 # extract fan-out: tasks per core (see stage_extract_text)
 EXTRACT_WAVES = 3
-# the linking dim tables (each its own lineage commit / Iceberg table)
+# the linking dim tables; link_map (last) is derived from the other four
 LINK_DIM_TABLES = ("alias_map", "idf", "ent", "labels", "link_map")
 
 
@@ -56,7 +57,12 @@ class Pipeline:
         self.metrics: dict[str, dict] = {}
 
     # -- stage runner -------------------------------------------------
-    def _stage(self, name: str, inputs: list[str], build, partition_by=None) -> str:
+    def _stage(self, name: str, inputs: list[str], write) -> str:
+        """Run one stage as one snapshot. ``write(out_path)`` puts every
+        output of the stage on disk and returns its metrics (with
+        ``rows``); one lineage commit then covers all of them. A crash
+        inside ``write`` leaves the stage uncommitted, so the re-run
+        redoes the whole stage — safe, because every write overwrites."""
         out_path = f"{self.out}/{name}"
         fp = fingerprint_paths(*inputs, extra=name)
         prior = self.log.committed(name, fp)
@@ -64,29 +70,28 @@ class Pipeline:
             self.metrics[name] = {"skipped": True, **prior["metrics"]}
             return out_path
         t0 = time.time()
-        df = build()
-        write_partitioned(df, out_path, partition_by=partition_by)
-        n = parquet_rows(out_path)
-        m = {"rows": n, "seconds": round(time.time() - t0, 3)}
-        # df= is ignored by the parquet LineageLog (data already on
-        # disk) and is the atomic append for an IcebergLineage backend —
-        # the one-signature seam both backends conform to.
-        self.log.commit(name, fp, n, out_path, metrics=m, df=df)
+        m = write(out_path)
+        m["seconds"] = round(time.time() - t0, 3)
+        self.log.commit(name, fp, m["rows"], metrics=m)
         self.metrics[name] = {"skipped": False, **m}
         return out_path
+
+    @staticmethod
+    def _write(df: DataFrame, path: str, partition_by=None) -> int:
+        write_partitioned(df, path, partition_by=partition_by)
+        return parquet_rows(path)
 
     def _read(self, path: str) -> DataFrame:
         return self.spark.read.parquet(path)
 
     # -- stages --------------------------------------------------------
     def stage_extract_text(self) -> str:
-        def build():
+        def write(out_path):
             pages = self.spark.read.parquet(self.pages_path)
             # Highly compressible corpora can land in far fewer input
             # splits than cores (maxPartitionBytes is a byte budget, not
             # a row budget) — spread the UDF stage across the cluster
-            # explicitly. On Iceberg this is bucket(url_hash) at the
-            # table layout level instead.
+            # explicitly.
             # 3 waves: every Python task pays a fixed start-up cost
             # whether or not it holds rows (~0.06 CPU-s with
             # kgeng.pyworker, ~0.22 more without), so fewer, longer
@@ -95,95 +100,45 @@ class Pipeline:
             # (33.8 / 28.1 CPU-s), 12 tasks 6.87 / 7.18 s (25.1 /
             # 26.0 CPU-s).
             target = self.spark.sparkContext.defaultParallelism * EXTRACT_WAVES
-            return pages.repartition(target, "url").select(
+            text = pages.repartition(target, "url").select(
                 "url", "lang", extracted_text(F.col("html")).alias("text")
             )
+            return {"rows": self._write(text, out_path)}
 
-        return self._stage("extract_text", [self.pages_path], build)
+        return self._stage("extract_text", [self.pages_path], write)
 
     def stage_triples(self, text_path: str) -> str:
-        def build():
+        def write(out_path):
             pages = self._read(text_path).filter(F.col("lang") == "en")
-            return extract_triples(pages)
+            return {"rows": self._write(extract_triples(pages), out_path)}
 
-        return self._stage("triples", [text_path], build)
+        return self._stage("triples", [text_path], write)
 
     def stage_link_dims(self) -> str:
         """Materialize the corpus-independent linking tables (alias
-        map, idf, entity weight maps, labels). Runs concurrently with
-        extraction — it only needs the dictionary."""
-        out_path = f"{self.out}/link_dims"
-        fp = fingerprint_paths(self.dict_path, extra="link_dims")
-        # per-output lineage: one record per dim TABLE, so the Iceberg
-        # backend — whose commit IS that table's atomic append — holds
-        # this call site unmodified (either-backend seam, VERDICT r4)
-        priors = {
-            n: self.log.committed(f"link_dims.{n}", fp) for n in LINK_DIM_TABLES
-        }
-        if all(priors.values()):
-            m = {
-                "rows": sum(p["row_count"] for p in priors.values()),
-                "seconds": max(p["metrics"].get("seconds", 0) for p in priors.values()),
-            }
-            self.metrics["link_dims"] = {"skipped": True, **m}
-            return out_path
-        t0 = time.time()
-        dictionary = self.spark.read.parquet(self.dict_path)
-        dims = build_link_dims(dictionary)
-        total = 0
-        for name in LINK_DIM_TABLES:
-            prior = priors[name]
-            if prior is not None:
-                # all-or-nothing resume would re-commit the already
-                # committed tables — under an Iceberg backend, whose
-                # commit IS the data append, that duplicates rows
-                # (ADVICE r5). The priors dict has the per-table
-                # answer; skip per table.
-                total += prior["row_count"]
-                continue
-            t_table = time.time()
-            df = dims[name]
-            if name == "link_map":
-                # the winner map's lineage spans every base dim; built
-                # from the in-memory dims dict it would RE-EXECUTE the
-                # alias/idf/ent computations just written above (no
-                # plan reuse across references — the CLAUDE.md trap),
-                # queued behind extraction on this side thread. The
-                # base tables are already on disk: derive it from the
-                # read-back snapshots instead, zero recompute.
-                from kgeng.link.candidates import link_map as _link_map
+        map, idf, entity weight maps, labels, winner map). Runs
+        concurrently with extraction — it only needs the dictionary."""
 
-                base = {
-                    n2: self._read(f"{out_path}/{n2}")
-                    for n2 in ("alias_map", "idf", "ent", "labels")
-                }
-                keys = (
-                    base["alias_map"]
-                    .select(F.col("alias_norm").alias("surface_norm"))
-                    .distinct()
-                )
-                df = _link_map(keys, dims=base)
-            dim_path = f"{out_path}/{name}"
-            write_partitioned(df, dim_path)
-            n = parquet_rows(dim_path)
-            total += n
-            self.log.commit(
-                f"link_dims.{name}",
-                fp,
-                n,
-                dim_path,
-                # per-table seconds start at THIS table's build, not the
-                # stage start (ADVICE r5: the 4th table's lineage metric
-                # was absorbing the first three tables' wall time)
-                metrics={"rows": n, "seconds": round(time.time() - t_table, 3)},
-                df=df,
-            )
-        m = {"rows": total, "seconds": round(time.time() - t0, 3)}
-        self.metrics["link_dims"] = {"skipped": False, **m}
-        return out_path
+        def write(out_path):
+            dims = build_link_dims(self.spark.read.parquet(self.dict_path))
+            base_tables = LINK_DIM_TABLES[:-1]
+            rows = sum(self._write(dims[n], f"{out_path}/{n}") for n in base_tables)
+            # the winner map's lineage spans every base dim; built from
+            # the in-memory dims dict it would RE-EXECUTE the
+            # alias/idf/ent computations just written above (no plan
+            # reuse across references — the CLAUDE.md trap), queued
+            # behind extraction on this side thread. The base tables are
+            # already on disk: derive it from the read-back snapshots
+            # instead, zero recompute.
+            base = {n: self._read(f"{out_path}/{n}") for n in base_tables}
+            keys = base["alias_map"].select(F.col("alias_norm").alias("surface_norm")).distinct()
+            rows += self._write(link_map(keys, dims=base), f"{out_path}/link_map")
+            return {"rows": rows}
+
+        return self._stage("link_dims", [self.dict_path], write)
 
     def stage_link(self, triples_path: str, dims_path: str) -> str:
-        def build():
+        def write(out_path):
             triples = self._read(triples_path)
             dims = {
                 name: self._read(f"{dims_path}/{name}")
@@ -192,22 +147,22 @@ class Pipeline:
             linked, unlinked = link_triples(triples, dims=dims)
             # persist the miss side-channel next to the stage output
             write_partitioned(unlinked, f"{self.out}/link_misses")
-            return linked
+            return {"rows": self._write(linked, out_path)}
 
-        return self._stage("link", [triples_path, dims_path], build)
+        return self._stage("link", [triples_path, dims_path], write)
 
     def stage_canon_map(self) -> str:
         """Materialize the canonical map once (CC over the dictionary);
         both the canon rewrite and materialize reuse the snapshot."""
 
-        def build():
+        def write(out_path):
             dictionary = self.spark.read.parquet(self.dict_path)
-            return canonical_map(dictionary)
+            return {"rows": self._write(canonical_map(dictionary), out_path)}
 
-        return self._stage("canon_map", [self.dict_path], build)
+        return self._stage("canon_map", [self.dict_path], write)
 
     def stage_canon(self, linked_path: str, cmap_path: str) -> str:
-        def build():
+        def write(out_path):
             linked = self._read(linked_path)
             cmap = F.broadcast(self._read(cmap_path))
             s_map = cmap.withColumnRenamed("curie", "subject_curie").withColumnRenamed(
@@ -216,7 +171,7 @@ class Pipeline:
             o_map = cmap.withColumnRenamed("curie", "object_curie").withColumnRenamed(
                 "canonical_curie", "object_canon"
             )
-            return (
+            canon = (
                 linked.join(s_map, "subject_curie")
                 .join(o_map, "object_curie")
                 .select(
@@ -226,32 +181,18 @@ class Pipeline:
                     F.col("object_canon").alias("object"),
                 )
             )
+            return {"rows": self._write(canon, out_path)}
 
-        return self._stage("canon", [linked_path, cmap_path], build)
+        return self._stage("canon", [linked_path, cmap_path], write)
 
     def stage_materialize(self, canon_path: str, cmap_path: str) -> tuple[str, str]:
-        canon_df_path = canon_path
         edges_out = f"{self.out}/edges"
         nodes_out = f"{self.out}/nodes"
-        fp = fingerprint_paths(canon_df_path, self.dict_path, extra="materialize")
-        # per-output lineage (nodes, edges): each record rides its own
-        # table's commit under either backend (see stage_link_dims)
-        prior_n = self.log.committed("materialize.nodes", fp)
-        prior_e = self.log.committed("materialize.edges", fp)
-        if prior_n is not None and prior_e is not None:
-            self.metrics["materialize"] = {"skipped": True, **prior_n["metrics"]}
-            return nodes_out, edges_out
-        t0 = time.time()
-        triples = self._read(canon_df_path)
-        dictionary = self.spark.read.parquet(self.dict_path)
-        cmap = F.broadcast(self._read(cmap_path))
 
-        # Each output resumes independently (ADVICE r5): a crash after
-        # the edges commit but before nodes must not re-commit edges —
-        # under an Iceberg backend the commit IS the append, so a
-        # re-run would duplicate every edge row.
-        edges = None
-        if prior_e is None:
+        def write(_out_path):
+            triples = self._read(canon_path)
+            dictionary = self.spark.read.parquet(self.dict_path)
+            cmap = F.broadcast(self._read(cmap_path))
             edges = self._build_edges(triples)
             # ObjectHashAggregate falls back to SORT-BASED aggregation
             # after 128 in-memory keys by default, so both collect_set
@@ -268,29 +209,20 @@ class Pipeline:
             _fb_prev = self.spark.conf.get(_fb_key, None)
             self.spark.conf.set(_fb_key, str(1 << 20))
             try:
-                write_partitioned(edges, edges_out, partition_by=["predicate"])
+                n_edges = self._write(edges, edges_out, partition_by=["predicate"])
             finally:
                 if _fb_prev is None:
                     self.spark.conf.unset(_fb_key)
                 else:
                     self.spark.conf.set(_fb_key, _fb_prev)
-        nodes = None
-        if prior_n is None:
-            nodes = self._build_nodes(triples, dictionary, cmap)
-            write_partitioned(nodes, nodes_out, partition_by=["node_class"])
+            n_nodes = self._write(
+                self._build_nodes(triples, dictionary, cmap),
+                nodes_out,
+                partition_by=["node_class"],
+            )
+            return {"rows": n_nodes + n_edges, "nodes": n_nodes, "edges": n_edges}
 
-        n_nodes = prior_n["row_count"] if prior_n else parquet_rows(nodes_out)
-        n_edges = prior_e["row_count"] if prior_e else parquet_rows(edges_out)
-        m = {"nodes": n_nodes, "edges": n_edges, "seconds": round(time.time() - t0, 3)}
-        if prior_n is None:
-            self.log.commit(
-                "materialize.nodes", fp, n_nodes, nodes_out, metrics=m, df=nodes
-            )
-        if prior_e is None:
-            self.log.commit(
-                "materialize.edges", fp, n_edges, edges_out, metrics=m, df=edges
-            )
-        self.metrics["materialize"] = {"skipped": False, **m}
+        self._stage("materialize", [canon_path, self.dict_path], write)
         return nodes_out, edges_out
 
     def _build_edges(self, triples: DataFrame) -> DataFrame:

@@ -86,20 +86,6 @@ DICTIONARY_SCHEMA = T.StructType(
     ]
 )
 
-# Per-stage lineage rows: one per (stage, partition-range) commit, so a
-# re-run can skip committed work (reference analogue: pickle checkpoints
-# at Kuzu/kuzu_build_graph_csv.py:674-680, rebuilt as a table protocol).
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("content_hash", T.StringType(), True),
-        T.StructField("committed_at", T.StringType(), False),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Typed-header parsing (reference S4)
 # ---------------------------------------------------------------------------

@@ -61,10 +61,7 @@ def get_spark(
         # Compile-time preferSortMergeJoin=false was REJECTED: without
         # runtime sizes it picks oversized build sides (LPA 19.3 s,
         # and an OOM risk at scale).
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("KGENG_SHJ_LOCAL_MAP_THRESHOLD", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # FAIR job scheduling: the pipeline overlaps dictionary-side
         # prep with extraction from a second driver thread (guide-§2.6
         # style latency hiding). Under FIFO the side thread's tiny dim
@@ -72,7 +69,7 @@ def get_spark(
         # GATES the leg (measured: link_dims wall 54.3 -> 28.3 s at
         # local[4], side thread fully hidden under FAIR). Sequential
         # single-job phases (the query suite) see no difference.
-        .config("spark.scheduler.mode", os.environ.get("KGENG_SCHEDULER_MODE", "FAIR"))
+        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 2k-row Arrow batches: bounded per-worker buffering for fat

@@ -5,7 +5,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kgeng.session import get_spark  # noqa: E402
 
@@ -15,6 +16,9 @@ def spark():
     s = get_spark("kgeng-tests", cpus=4, shuffle_partitions=4)
     yield s
 
+
+# generated inputs and outputs of the tests, inside this checkout
+FIX_DIR = os.path.join(REPO, ".fixtures")
 
 SF_DIR = os.environ.get("KGENG_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("KGENG_ORACLE_SF_DIR", "/root/testdata/sf0.01")

@@ -11,8 +11,7 @@ import pytest
 from kgeng import fixtures
 from kgeng.extract.text import extract_text_py, extracted_text
 from kgeng.extract.triples import extract_triples, extract_triples_py
-
-FIX_DIR = "/root/repo/.fixtures"
+from tests.conftest import FIX_DIR
 
 
 @pytest.fixture(scope="module")

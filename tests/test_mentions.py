@@ -6,6 +6,7 @@ import pytest
 
 from kgeng import fixtures
 from kgeng.extract.mentions import build_alias_trie, detect_mentions, _scan_text
+from tests.conftest import FIX_DIR
 
 
 def test_scan_longest_match_first():
@@ -27,8 +28,8 @@ def test_join_path_matches_trie_path(spark):
     """The auto-switch contract: the join-based exact-match path
     (forced via a tiny collect threshold) must produce the exact same
     mention multiset as the broadcast-trie path."""
-    pages_path = "/root/repo/.fixtures/mention_pages.parquet"
-    dict_path = "/root/repo/.fixtures/mention_dict.parquet"
+    pages_path = f"{FIX_DIR}/mention_pages.parquet"
+    dict_path = f"{FIX_DIR}/mention_dict.parquet"
     fixtures.write_pages(pages_path, 60)
     fixtures.write_dictionary(dict_path)
     pages = spark.read.parquet(pages_path).filter("lang = 'en'")
@@ -41,8 +42,8 @@ def test_join_path_matches_trie_path(spark):
 
 
 def test_detect_mentions_closed_form(spark):
-    pages_path = "/root/repo/.fixtures/mention_pages.parquet"
-    dict_path = "/root/repo/.fixtures/mention_dict.parquet"
+    pages_path = f"{FIX_DIR}/mention_pages.parquet"
+    dict_path = f"{FIX_DIR}/mention_dict.parquet"
     fixtures.write_pages(pages_path, 200)
     fixtures.write_dictionary(dict_path)
     pages = spark.read.parquet(pages_path).filter("lang = 'en'")

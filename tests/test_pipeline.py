@@ -4,18 +4,19 @@ snapshot/lineage resume without recomputation."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from kgeng import fixtures
 from kgeng.link.candidates import link_map
 from kgeng.pipeline import run_pipeline
-from tests.conftest import codegen_compiles
+from tests.conftest import FIX_DIR, codegen_compiles
 
-FIX_DIR = "/root/repo/.fixtures"
 N_PAGES = 1000
 
 
@@ -165,72 +166,55 @@ def test_resume_recomputes_on_input_change(spark, inputs):
     assert not r2["metrics"]["extract_text"]["skipped"]
 
 
-def test_materialize_resumes_per_table(spark, inputs, pipeline_out):
-    """Crash between the edges commit and the nodes commit (the exact
-    Iceberg duplicate-append scenario, ADVICE r5): on resume the edges
-    table must NOT be re-committed — under an Iceberg backend the
-    commit IS the append — while nodes rebuild normally."""
+def _content(spark, path):
+    """(row count, order-free xxhash64 sum) of a parquet dir. Maps are
+    hashed as their entry arrays; the sum is decimal because an int64
+    sum overflows under ANSI."""
+    df = spark.read.parquet(path)
+    cols = [
+        F.map_entries(c) if isinstance(df.schema[c].dataType, MapType) else F.col(c)
+        for c in df.columns
+    ]
+    row = df.select(F.count("*"), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).first()
+    return tuple(row)
+
+
+def test_materialize_crash_reruns_only_that_stage(spark, inputs, pipeline_out, monkeypatch):
+    """A crash between the edges write and the nodes write leaves
+    materialize uncommitted; the re-run redoes the whole stage (edges
+    too) and skips every other stage. In place: fingerprints include
+    the input paths, so a copied build would not resume."""
+    from kgeng.io.lineage import fingerprint_paths
     from kgeng.pipeline import Pipeline
 
     pages, dic = inputs
     out = os.path.join(FIX_DIR, "kg_out")
-    p = Pipeline(spark, pages, dic, out)
-    canon_path = f"{out}/canon"
-    cmap_path = f"{out}/canon_map"
-    from kgeng.io.lineage import fingerprint_paths
-
-    fp = fingerprint_paths(canon_path, dic, extra="materialize")
-    nodes_rec = p.log._path("materialize.nodes", fp)
-    edges_rec = p.log._path("materialize.edges", fp)
-    assert os.path.exists(nodes_rec) and os.path.exists(edges_rec)
-    n_nodes_before = spark.read.parquet(f"{out}/nodes").count()
-    # simulate the crash: nodes commit (and output) lost, edges kept
-    os.remove(nodes_rec)
+    before = {t: _content(spark, f"{out}/{t}") for t in ("edges", "nodes")}
+    edges_fp = fingerprint_paths(f"{out}/edges")
+    fp = fingerprint_paths(f"{out}/canon", dic, extra="materialize")
+    os.remove(Pipeline(spark, pages, dic, out).log._path("materialize", fp))
     shutil.rmtree(f"{out}/nodes")
-    with open(edges_rec, encoding="utf-8") as fh:
-        edges_rec_before = fh.read()
-    edges_data_mtime = max(
-        os.path.getmtime(os.path.join(r, f))
-        for r, _d, fs in os.walk(f"{out}/edges") for f in fs
-    )
-    nodes_out, edges_out = p.stage_materialize(canon_path, cmap_path)
-    assert not p.metrics["materialize"]["skipped"]
-    # nodes rebuilt with the same content; commit record restored
-    assert spark.read.parquet(nodes_out).count() == n_nodes_before
-    assert os.path.exists(nodes_rec)
-    # edges NOT re-committed and NOT rewritten
-    with open(edges_rec, encoding="utf-8") as fh:
-        assert fh.read() == edges_rec_before
-    assert max(
-        os.path.getmtime(os.path.join(r, f))
-        for r, _d, fs in os.walk(edges_out) for f in fs
-    ) == edges_data_mtime
+
+    def crash(self, *args):
+        raise RuntimeError("injected crash after the edges write")
+
+    with monkeypatch.context() as m:
+        m.setattr(Pipeline, "_build_nodes", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(spark, pages, dic, out)
+    assert fingerprint_paths(f"{out}/edges") != edges_fp  # edges were rewritten
+    assert not os.path.exists(f"{out}/nodes")
+
+    result = run_pipeline(spark, pages, dic, out)
+    ran = sorted(k for k, v in result["metrics"].items() if not v["skipped"])
+    assert ran == ["materialize"]
+    assert {t: _content(spark, f"{out}/{t}") for t in ("edges", "nodes")} == before
 
 
-def test_link_dims_resumes_per_table(spark, inputs, pipeline_out):
-    """Same per-table contract for the 4 linking dim tables: losing
-    one table's commit rebuilds only that table."""
-    from kgeng.io.lineage import fingerprint_paths
-    from kgeng.pipeline import LINK_DIM_TABLES, Pipeline
-
-    pages, dic = inputs
-    out = os.path.join(FIX_DIR, "kg_out")
-    p = Pipeline(spark, pages, dic, out)
-    fp = fingerprint_paths(dic, extra="link_dims")
-    recs = {n: p.log._path(f"link_dims.{n}", fp) for n in LINK_DIM_TABLES}
-    assert all(os.path.exists(r) for r in recs.values())
-    total_before = sum(
-        p.log.committed(f"link_dims.{n}", fp)["row_count"] for n in LINK_DIM_TABLES
-    )
-    victim = "idf"
-    os.remove(recs[victim])
-    shutil.rmtree(f"{out}/link_dims/{victim}")
-    kept = {n: open(recs[n], encoding="utf-8").read()
-            for n in LINK_DIM_TABLES if n != victim}
-    p.stage_link_dims()
-    assert not p.metrics["link_dims"]["skipped"]
-    assert p.metrics["link_dims"]["rows"] == total_before
-    assert os.path.exists(recs[victim])
-    for n, before in kept.items():
-        with open(recs[n], encoding="utf-8") as fh:
-            assert fh.read() == before, n
+def test_one_lineage_commit_per_stage(pipeline_out):
+    lineage = os.path.join(FIX_DIR, "kg_out", "_lineage")
+    stages = []
+    for f in os.listdir(lineage):
+        with open(os.path.join(lineage, f), encoding="utf-8") as fh:
+            stages.append(json.load(fh)["stage"])
+    assert sorted(stages) == sorted(pipeline_out["metrics"])

@@ -13,9 +13,10 @@ from kgeng import fixtures
 from kgeng.graph.build import ORDERED_CATEGORIES
 from kgeng.graph.refbuild import run_refbuild
 from kgeng.io.sources import read_kgx_csv, read_kgx_jsonl, write_merged_json
+from tests.conftest import FIX_DIR
 
-FIX = "/root/repo/.fixtures/kgx"
-OUT = "/root/repo/.fixtures/refbuild_out"
+FIX = os.path.join(FIX_DIR, "kgx")
+OUT = os.path.join(FIX_DIR, "refbuild_out")
 
 N_NODES, N_EDGES = 200, 600
 
@@ -92,7 +93,7 @@ def test_refbuild_predicate_pairs_sorted_distinct(build):
 
 
 def test_merged_json_sink(spark, build, tmp_path):
-    out = "/root/repo/.fixtures/merged_json"
+    out = os.path.join(FIX_DIR, "merged_json")
     nodes = build["nodes"].withColumnRenamed("labels", "category").drop("node_class")
     edges = (
         build["edges"]

@@ -12,7 +12,7 @@ from kgeng.textops.dedup import dedup_embedding_cosine, dedup_exact, dedup_minha
 from kgeng.textops.multimodal import decode_image, mm_features
 from kgeng.textops.similarity import TOP_K, ann_cosine_topk, ann_ivf_topk, ann_lsh_topk
 
-from tests.conftest import SF_DIR
+from tests.conftest import FIX_DIR, SF_DIR
 
 
 def _n_docs(spark):
@@ -235,7 +235,7 @@ def test_streaming_stateful_user_totals(spark):
     import os
     import shutil
 
-    stream_dir = "/root/repo/.fixtures/stream_events2"
+    stream_dir = f"{FIX_DIR}/stream_events2"
     os.makedirs(stream_dir, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{stream_dir}/events.parquet")
     q = (
@@ -274,7 +274,7 @@ def test_tws_plan_builds(spark):
 
     from kgeng.streaming.events import streaming_user_totals_tws
 
-    stream_dir = "/root/repo/.fixtures/stream_events_tws"
+    stream_dir = f"{FIX_DIR}/stream_events_tws"
     os.makedirs(stream_dir, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{stream_dir}/events.parquet")
     df = streaming_user_totals_tws(spark, stream_dir)
@@ -299,7 +299,7 @@ def test_transform_with_state_parity(spark):
     )
     from kgeng.streaming.events import streaming_user_totals_tws
 
-    stream_dir = "/root/repo/.fixtures/stream_events_tws"
+    stream_dir = f"{FIX_DIR}/stream_events_tws"
     os.makedirs(stream_dir, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{stream_dir}/events.parquet")
     # TWS only runs on the RocksDB state store
@@ -444,7 +444,7 @@ def test_streaming_event_counts(spark):
     import os
     import shutil
 
-    stream_dir = "/root/repo/.fixtures/stream_events"
+    stream_dir = f"{FIX_DIR}/stream_events"
     os.makedirs(stream_dir, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{stream_dir}/events.parquet")
     q = (
@@ -469,7 +469,7 @@ def test_streaming_dedup_events(spark):
 
     from kgeng.streaming.events import streaming_dedup_events
 
-    stream_dir = "/root/repo/.fixtures/stream_events3"
+    stream_dir = f"{FIX_DIR}/stream_events3"
     shutil.rmtree(stream_dir, ignore_errors=True)
     os.makedirs(stream_dir, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{stream_dir}/events_a.parquet")
@@ -504,7 +504,7 @@ def test_streaming_sessions_match_batch(spark):
     from kgeng.streaming.events import SESSION_GAP_MINUTES, streaming_sessions
 
     src = f"{SF_DIR}/events.parquet"
-    stream_dir = "/root/repo/.fixtures/stream_events4"
+    stream_dir = f"{FIX_DIR}/stream_events4"
     shutil.rmtree(stream_dir, ignore_errors=True)
     os.makedirs(stream_dir, exist_ok=True)
     # two files so the second batch's watermark can time out sessions
@@ -576,7 +576,7 @@ def test_streaming_click_attribution_matches_batch_join(spark):
         streaming_click_attribution,
     )
 
-    stream_dir = "/root/repo/.fixtures/stream_events_attrib"
+    stream_dir = f"{FIX_DIR}/stream_events_attrib"
     os.makedirs(stream_dir, exist_ok=True)
     shutil.copy(f"{SF_DIR}/events.parquet", f"{stream_dir}/events.parquet")
     q = (
