@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgeng.io.scanmeta import read_parquet
+
 # c_mktsegment -> deliberately unordered category array
 SEGMENT_CATEGORIES: dict[str, list[str]] = {
     "BUILDING": ["biolink:NamedThing", "biolink:Disease", "biolink:PhenotypicFeature"],
@@ -46,7 +48,7 @@ DEFAULT_CATEGORY = ["biolink:NamedThing"]
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _lit_arr(vals: list[str]):

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgeng.io.scanmeta import parquet_rows, read_parquet
+
 
 def degree0_nodes(nodes: DataFrame, edges: DataFrame, limit: int | None = None) -> DataFrame:
     """Nodes with no incoming edge (``node.degree_in(a) = 0``),
@@ -87,16 +89,16 @@ def run_degree0_delete(
     if prior is not None:
         return prior
 
-    nodes = spark.read.parquet(nodes_path)
-    edges = spark.read.parquet(edges_path)
-    n_nodes_before = nodes.count()
-    n_edges_before = edges.count()
+    nodes = read_parquet(spark, nodes_path)
+    edges = read_parquet(spark, edges_path)
+    n_nodes_before = parquet_rows(nodes_path)
+    n_edges_before = parquet_rows(edges_path)
     victims = degree0_nodes(nodes, edges, limit=limit).select("id")
     new_nodes, new_edges = detach_delete(nodes, edges, victims)
     new_nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
     new_edges.write.mode("overwrite").parquet(f"{out_dir}/edges")
-    n_nodes = spark.read.parquet(f"{out_dir}/nodes").count()
-    n_edges = spark.read.parquet(f"{out_dir}/edges").count()
+    n_nodes = parquet_rows(f"{out_dir}/nodes")
+    n_edges = parquet_rows(f"{out_dir}/edges")
     return log.commit(
         "degree0_delete",
         fp,

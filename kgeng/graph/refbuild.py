@@ -28,6 +28,7 @@ from kgeng.graph.build import (
     reorder_categories,
     resolve_edge_classes,
 )
+from kgeng.io.scanmeta import read_parquet
 from kgeng.io.sources import read_kgx_csv
 from kgeng.schemas import sanitize_column_name
 
@@ -293,13 +294,13 @@ def run_refbuild(
         nodes.withColumnRenamed("labels", "category"), reorder=False
     )
     lookup.write.mode("overwrite").parquet(f"{out_dir}/lookups/node_classes")
-    lookup = spark.read.parquet(f"{out_dir}/lookups/node_classes")
+    lookup = read_parquet(spark, f"{out_dir}/lookups/node_classes")
     resolved, dropped = resolve_edge_classes(edges_raw, lookup, broadcast_lookup=True)
     pairs_df = predicate_class_pairs(resolved)
     pairs_df.write.mode("overwrite").parquet(f"{out_dir}/lookups/edge_predicates")
     pairs = {
         r["predicate"]: [(p["subject_class"], p["object_class"]) for p in r["class_pairs"]]
-        for r in spark.read.parquet(f"{out_dir}/lookups/edge_predicates").collect()
+        for r in read_parquet(spark, f"{out_dir}/lookups/edge_predicates").collect()
     }
 
     # BIN — dynamic-partition fan-out (S6)

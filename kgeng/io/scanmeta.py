@@ -1,4 +1,4 @@
-"""Driver-side parquet metadata probes.
+"""Driver-side parquet metadata probes, and the one parquet read path.
 
 Query builders sometimes need two facts about an input table before
 declaring the plan: its row count (to size derived constants like the
@@ -9,6 +9,14 @@ job, no ``df.rdd`` materialization (building the Python RDD lineage
 per query was VERDICT r4 nit #4). The pipeline counts each stage's
 output rows for its lineage commit with the same ``parquet_rows``.
 
+Every parquet read in kgeng goes through ``read_parquet``. A
+schema-less ``spark.read.parquet`` runs a one-task Spark job to infer
+the schema from the footers on EVERY call; ``read_parquet`` infers it
+once per (session, path, file list, stat signature) and hands it to
+``spark.read.schema(...)`` after that, which runs no job — the
+parquet-directory version of a table format keeping its schema in
+the log.
+
 On a real deployment these probes map to catalog statistics (Iceberg
 snapshot summaries carry record counts and file sizes); the file-level
 fallback here is the parquet-directory equivalent.
@@ -18,6 +26,8 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
+from collections import OrderedDict
 from functools import lru_cache
 
 # Spark's split budget default, used when no session is supplied or
@@ -89,6 +99,46 @@ def parquet_rows(path: str) -> int:
     count."""
     files = tuple(_parquet_files(path))
     return _parquet_rows_cached(files, _stat_sig(files))
+
+
+_SCHEMA_CACHE_SIZE = 256
+_schemas: OrderedDict = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def parquet_schema(spark, path: str):
+    """The schema Spark infers for ``path``, inferred once. Cached keyed
+    by (session UUID, path, file list, stat signature): a rewritten or
+    grown path is inferred again, and a session with other parquet
+    confs never reuses another session's schema. Only what Spark
+    inferred is cached — a written DataFrame's schema differs on
+    read-back (partition columns move last, every field is nullable).
+    Raises ``OSError`` when the driver cannot stat ``path``."""
+    files = tuple(_parquet_files(path))
+    key = (spark._jsparkSession.sessionUUID(), path, files, _stat_sig(files))
+    with _schemas_lock:
+        schema = _schemas.get(key)
+        if schema is not None:
+            _schemas.move_to_end(key)
+            return schema
+    schema = spark.read.parquet(path).schema
+    with _schemas_lock:
+        _schemas[key] = schema
+        while len(_schemas) > _SCHEMA_CACHE_SIZE:
+            _schemas.popitem(last=False)
+    return schema
+
+
+def read_parquet(spark, path: str):
+    """``spark.read.parquet(path)`` without the per-call schema
+    inference job (see ``parquet_schema``). A path the driver cannot
+    stat (a remote URI, a missing path) is read the plain way, so
+    Spark reports it as it always has."""
+    try:
+        schema = parquet_schema(spark, path)
+    except OSError:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _total_bytes_and_files(path: str) -> tuple[int, int]:

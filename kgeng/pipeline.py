@@ -35,7 +35,7 @@ from kgeng.extract.text import extracted_text
 from kgeng.extract.triples import extract_triples
 from kgeng.graph.build import reorder_categories
 from kgeng.io.lineage import LineageLog, fingerprint_paths
-from kgeng.io.scanmeta import parquet_rows
+from kgeng.io.scanmeta import parquet_rows, read_parquet
 from kgeng.io.sinks import write_partitioned
 from kgeng.link.candidates import build_link_dims, link_map, link_triples
 
@@ -82,12 +82,12 @@ class Pipeline:
         return parquet_rows(path)
 
     def _read(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     # -- stages --------------------------------------------------------
     def stage_extract_text(self) -> str:
         def write(out_path):
-            pages = self.spark.read.parquet(self.pages_path)
+            pages = self._read(self.pages_path)
             # Highly compressible corpora can land in far fewer input
             # splits than cores (maxPartitionBytes is a byte budget, not
             # a row budget) — spread the UDF stage across the cluster
@@ -120,7 +120,7 @@ class Pipeline:
         concurrently with extraction — it only needs the dictionary."""
 
         def write(out_path):
-            dims = build_link_dims(self.spark.read.parquet(self.dict_path))
+            dims = build_link_dims(self._read(self.dict_path))
             base_tables = LINK_DIM_TABLES[:-1]
             rows = sum(self._write(dims[n], f"{out_path}/{n}") for n in base_tables)
             # the winner map's lineage spans every base dim; built from
@@ -156,7 +156,7 @@ class Pipeline:
         both the canon rewrite and materialize reuse the snapshot."""
 
         def write(out_path):
-            dictionary = self.spark.read.parquet(self.dict_path)
+            dictionary = self._read(self.dict_path)
             return {"rows": self._write(canonical_map(dictionary), out_path)}
 
         return self._stage("canon_map", [self.dict_path], write)
@@ -191,7 +191,7 @@ class Pipeline:
 
         def write(_out_path):
             triples = self._read(canon_path)
-            dictionary = self.spark.read.parquet(self.dict_path)
+            dictionary = self._read(self.dict_path)
             cmap = F.broadcast(self._read(cmap_path))
             edges = self._build_edges(triples)
             # ObjectHashAggregate falls back to SORT-BASED aggregation

@@ -12,7 +12,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgeng.io.scanmeta import parquet_schema, read_parquet
+
 SESSION_GAP_MINUTES = 30
+
+
+def _event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
+    """A file-source stream over ``events_dir``, one file per
+    micro-batch. The streaming source needs its schema up front; it is
+    inferred once per directory state (a grown directory is inferred
+    again)."""
+    return (
+        spark.readStream.schema(parquet_schema(spark, events_dir))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(events_dir)
+    )
 
 
 def streaming_event_counts(
@@ -23,12 +37,7 @@ def streaming_event_counts(
     memory sink in tests. Late rows beyond the watermark are dropped —
     the standard late-data contract. ``events_dir`` must be a
     directory (the streaming file source tails directories)."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    stream = _event_stream(spark, events_dir)
     # parquet NTZ timestamps -> session-TZ timestamps (watermarks
     # require TIMESTAMP, not TIMESTAMP_NTZ)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -49,12 +58,7 @@ def streaming_user_totals(spark: SparkSession, events_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    stream = _event_stream(spark, events_dir)
 
     def update_totals(key, pdf_iter, state):
         n, total = state.get if state.exists else (0, 0.0)
@@ -113,12 +117,7 @@ def streaming_user_totals_tws(spark: SparkSession, events_dir: str) -> DataFrame
         def close(self) -> None:
             pass
 
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    stream = _event_stream(spark, events_dir)
     return stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=TotalsProcessor(),
         outputStructType="user_id long, n_events long, total_value double",
@@ -148,12 +147,7 @@ def streaming_sessions(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     gap_s = gap_minutes * 60
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    stream = _event_stream(spark, events_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
     def update(key, pdf_iter, state):
@@ -212,12 +206,7 @@ def streaming_dedup_events(
     streaming twin of ``dedup_exact``). The pattern a training-data
     pipeline uses to dedup a document firehose: key = content
     fingerprint, watermark = ingestion-time horizon."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    stream = _event_stream(spark, events_dir)
     stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -243,14 +232,9 @@ def streaming_click_attribution(
     (user_id); per-key buffered rows are bounded by rate × horizon.
     A whale user bounds at its own event rate within the window — the
     same per-(user, hour) bound as the batch twin's bucketed join."""
-    schema = spark.read.parquet(events_dir).schema
 
     def src() -> DataFrame:
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(events_dir)
-        )
+        s = _event_stream(spark, events_dir)
         return s.withColumn("ts", F.col("ts").cast("timestamp"))
 
     clicks = (
@@ -288,7 +272,7 @@ def streaming_click_attribution(
 def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: gap > 30 min starts a new session;
     per-user session count and mean session length (rows)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     epoch = F.col("ts").cast("timestamp").cast("long")  # NTZ -> TS -> seconds
     gap = epoch - F.lag(epoch).over(w)
@@ -310,7 +294,7 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON property extraction from the ``props`` column, bucketed."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
         ev.select((k % 10).alias("k_bucket"), "value")

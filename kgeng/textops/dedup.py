@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgeng.io.scanmeta import needs_ingest_spread
+from kgeng.io.scanmeta import needs_ingest_spread, read_parquet
 
 JACCARD_THRESHOLD = 0.6
 N_MINHASH = 16
@@ -61,7 +61,7 @@ def dup_text_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     main pipeline applies — to spread the shingling/hashing work across
     every core before the fan-out."""
     path = f"{sf_dir}/documents.parquet"
-    d = spark.read.parquet(path).select("doc_id", "text")
+    d = read_parquet(spark, path).select("doc_id", "text")
     if needs_ingest_spread(spark, path):
         d = d.repartition(spark.sparkContext.defaultParallelism)
     perturbed = d.select(
@@ -76,7 +76,7 @@ def dup_embedding_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (single compressed split otherwise serializes the per-vector
     bucket/norm arithmetic)."""
     path = f"{sf_dir}/embeddings.parquet"
-    e = spark.read.parquet(path).select(
+    e = read_parquet(spark, path).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     if needs_ingest_spread(spark, path):
@@ -213,7 +213,7 @@ def _jaccard_for_pairs(sh: DataFrame, pairs: DataFrame, threshold: float) -> Dat
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: md5-fingerprint groupBy; emit duplicate groups with
     the kept representative (min id)."""
-    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    corpus = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     corpus = corpus.unionByName(
         corpus.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
     )

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgeng.io.scanmeta import read_parquet
+
 FEATURE_DIM = 8
 
 MEDIA_SCHEMA = "doc_id bigint, payload binary, mime string"
@@ -30,7 +32,7 @@ FEATURES_SCHEMA = "doc_id bigint, n_bytes int, feature array<float>"
 
 def media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> media(doc_id, payload binary, mime)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return d.select(
         "doc_id",
         F.encode(F.col("text"), "utf-8").alias("payload"),

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kgeng.io.scanmeta import needs_ingest_spread
+from kgeng.io.scanmeta import needs_ingest_spread, read_parquet
 
 TOP_K = 5
 N_QUERIES = 10
@@ -46,7 +46,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fewer splits than cores (the per-vector norm/bucket/dot
     # arithmetic is the hot loop); a well-split table is left alone
     path = f"{sf_dir}/embeddings.parquet"
-    e = spark.read.parquet(path).select(
+    e = read_parquet(spark, path).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     if needs_ingest_spread(spark, path):

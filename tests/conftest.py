@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -29,3 +31,29 @@ def codegen_compiles(spark) -> int:
     codegen cache hit does not compile)."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+class _JobCount:
+    n = 0
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Counts the Spark jobs the current thread runs inside the block:
+    they run under a fresh job group, read back from ``statusTracker``
+    once the listener bus has delivered their events.
+
+        with spark_jobs(spark) as jobs:
+            df.collect()
+        assert jobs.n == 1
+    """
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    count = _JobCount()
+    sc.setJobGroup(group, "spark_jobs")
+    try:
+        yield count
+    finally:
+        sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        count.n = len(sc.statusTracker().getJobIdsForGroup(group))

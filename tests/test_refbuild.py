@@ -278,6 +278,11 @@ def test_degree0_detach_delete_rewrite(spark, kgx_paths, tmp_path):
     # no surviving edge touches a deleted node
     new_nodes = spark.read.parquet(f"{out}/nodes")
     new_edges = spark.read.parquet(f"{out}/edges")
+    # the footer counts committed as metrics are the tables' row counts
+    assert m["n_nodes_before"] == spark.read.parquet(nodes_dir).count()
+    assert m["n_edges_before"] == spark.read.parquet(edges_dir).count()
+    assert m["n_nodes_after"] == new_nodes.count()
+    assert m["n_edges_after"] == new_edges.count()
     deleted = (
         spark.read.parquet(nodes_dir)
         .join(new_nodes.select("id"), "id", "left_anti")
