@@ -4,6 +4,7 @@ import os
 import sys
 import uuid
 from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -33,10 +34,6 @@ def codegen_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-class _JobCount:
-    n = 0
-
-
 @contextmanager
 def spark_jobs(spark):
     """Counts the Spark jobs the current thread runs inside the block:
@@ -49,7 +46,7 @@ def spark_jobs(spark):
     """
     sc = spark.sparkContext
     group = f"counted-{uuid.uuid4().hex}"
-    count = _JobCount()
+    count = SimpleNamespace(n=0)
     sc.setJobGroup(group, "spark_jobs")
     try:
         yield count
