@@ -1,19 +1,25 @@
-"""Entity linking: candidate generation + TF-IDF cosine ranking.
+"""Entity linking: the dictionary-side winner map + the triple join.
 
 All pure DataFrame algebra — no Spark-ML vector UDTs, no Python — so
 every stage stays inside Catalyst (column pruning, broadcast
 selection, AQE).
 
-Plan shape (kept deliberately shallow — ~5 shuffles total — because
-the dictionary side is a dimension-sized computation that should never
-dominate the corpus-sized probe):
+The complete winner map ``alias_norm -> curie`` is dictionary-side:
+candidate generation is an equi-join on ``alias_norm``, so only
+alias-shaped surfaces can link, and scoring a surface uses nothing but
+the dictionary. :func:`link_map` ranks every alias key once, in one
+plan, and :func:`link_triples` joins the corpus against that map;
+entries for aliases a corpus never mentions match no row.
+
+Plan shape of :func:`link_map` (one physical plan: the ``idf``
+broadcast feeds both weight branches and Spark builds it once):
 
 1. explode dictionary profiles -> per-(curie, token) counts   [shuffle]
 2. document frequencies -> idf                                [shuffle]
 3. entity weight maps: curie -> map<token, w> + norm          [shuffle]
-4. surface token weights re-collected per surface             [shuffle]
-5. candidates (surface × exploded alias, broadcast) scored with an
-   inline map-lookup dot product; window rank per surface     [shuffle]
+4. alias keys' token weights re-collected per surface         [shuffle]
+5. (surface, curie) alias pairs scored with an inline
+   map-lookup dot product; window rank per surface            [shuffle]
 
 Scoring: ``score = exact_label_bonus + dot(w_s, w_e) / |w_e|`` with
 ``w = token_count · idf``. Per-document tf normalization is omitted on
@@ -35,32 +41,9 @@ def normalize_col(col):
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def candidate_pairs(surfaces: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """surfaces(surface_norm) × dictionary(curie, aliases) ->
-    (surface_norm, curie) candidate pairs, via broadcast of the
-    exploded alias table."""
-    alias_map = (
-        dictionary.select("curie", F.explode("aliases").alias("alias"))
-        .select("curie", normalize_col(F.col("alias")).alias("alias_norm"))
-        .distinct()
-    )
-    return surfaces.select("surface_norm").distinct().join(
-        F.broadcast(alias_map),
-        F.col("surface_norm") == F.col("alias_norm"),
-    ).select("surface_norm", "curie")
-
-
-def build_link_dims(dictionary: DataFrame) -> dict[str, DataFrame]:
-    """Dictionary-side (corpus-independent) linking tables — computable
-    before/concurrently with extraction:
-
-    - ``alias_map``: (alias_norm, curie) exploded surface forms
-    - ``idf``:       (token, idf) over entity profiles
-    - ``ent``:       (curie, w_map map<token,w>, norm_e)
-    - ``labels``:    (curie, label_norm) for the exact-label bonus
-    - ``link_map``:  (surface_norm, curie) the complete precomputed
-      winner map over every alias key (see inline note)
-    """
+def link_map(dictionary: DataFrame) -> DataFrame:
+    """dictionary(curie, label, aliases) -> (surface_norm, curie): the
+    winning curie for every normalized alias."""
     n_ents = dictionary.count()
     profiles = dictionary.select(
         "curie",
@@ -86,46 +69,18 @@ def build_link_dims(dictionary: DataFrame) -> dict[str, DataFrame]:
             F.sqrt(F.sum(F.col("w") ** 2)).alias("norm_e"),
         )
     )
-    alias_map = (
+    # candidates: every (alias_norm, curie) pair, each alias a surface
+    cands = (
         dictionary.select("curie", F.explode("aliases").alias("alias"))
-        .select("curie", normalize_col(F.col("alias")).alias("alias_norm"))
+        .select(normalize_col(F.col("alias")).alias("surface_norm"), "curie")
         .distinct()
     )
     labels = dictionary.select("curie", normalize_col(F.col("label")).alias("label_norm"))
-    dims = {"alias_map": alias_map, "idf": idf, "ent": ent, "labels": labels}
-    # The complete winner map alias_norm -> curie is itself
-    # dictionary-side: candidate generation is an equi-join on
-    # alias_norm, so only alias-shaped surfaces can link, and scoring a
-    # surface uses nothing but the dictionary tables above. Ranking
-    # every alias key once HERE (corpus-independent, overlapped with
-    # extraction by the pipeline's dictionary-side thread) lets
-    # link_triples skip both its corpus-wide surface pass and the
-    # per-run map computation; entries for aliases that never occur in
-    # a corpus match no row and change nothing.
-    all_alias_keys = alias_map.select(F.col("alias_norm").alias("surface_norm")).distinct()
-    dims["link_map"] = link_map(all_alias_keys, dims=dims)
-    return dims
-
-
-def rank_candidates(
-    surfaces: DataFrame,
-    dictionary: DataFrame | None = None,
-    dims: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """-> (surface_norm, curie, score, rank) with rank=1 the chosen
-    link for each surface. Pass precomputed ``dims`` (from
-    :func:`build_link_dims`, possibly read back from parquet) to skip
-    the dictionary-side computation at probe time."""
-    if dims is None:
-        if dictionary is None:
-            raise ValueError("need dictionary or dims")
-        dims = build_link_dims(dictionary)
-    idf, ent, labels = dims["idf"], dims["ent"], dims["labels"]
 
     # surface token weights, re-collected per surface (surfaces are
     # short strings; the explode is 1-3 rows each)
     surf = (
-        surfaces.select("surface_norm")
+        cands.select("surface_norm")
         .distinct()
         .select("surface_norm", F.explode(F.split(F.col("surface_norm"), " ")).alias("token"))
         .groupBy("surface_norm", "token")
@@ -137,10 +92,6 @@ def rank_candidates(
     )
 
     # candidates scored with inline map-lookup dot product
-    cands = surfaces.select("surface_norm").distinct().join(
-        F.broadcast(dims["alias_map"]),
-        F.col("surface_norm") == F.col("alias_norm"),
-    ).select("surface_norm", "curie")
     dot = F.aggregate(
         F.col("s_toks"),
         F.lit(0.0),
@@ -161,56 +112,25 @@ def rank_candidates(
         )
     )
     w = Window.partitionBy("surface_norm").orderBy(F.col("score").desc(), F.col("curie"))
-    return scored.withColumn("rank", F.row_number().over(w))
-
-
-def link_map(
-    surfaces: DataFrame,
-    dictionary: DataFrame | None = None,
-    dims: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """-> (surface_norm, curie): the winning link per surface."""
-    return rank_candidates(surfaces, dictionary, dims).filter(F.col("rank") == 1).select(
-        "surface_norm", "curie"
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") == 1)
+        .select("surface_norm", "curie")
     )
 
 
-def link_triples(
-    triples: DataFrame,
-    dictionary: DataFrame | None = None,
-    dims: dict[str, DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """triples(url, subject_surface, predicate, object_surface) ->
+def link_triples(triples: DataFrame, lmap: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """triples(url, subject_surface, predicate, object_surface) and the
+    winner map ``lmap`` (from :func:`link_map`) ->
     (linked(url, subject_curie, predicate, object_curie), unlinked).
 
     Endpoints that match no dictionary alias drop to the ``unlinked``
     side-channel (the linking twin of J2's join-miss drop,
     ``Kuzu/kuzu_build_graph_csv.py:342-347``).
     """
-    if dims is None:
-        if dictionary is None:
-            raise ValueError("need dictionary or dims")
-        dims = build_link_dims(dictionary)
-    # The winner map is dictionary-side (see build_link_dims): only
-    # alias-shaped surfaces can link (candidate generation is an
-    # equi-join on alias_norm) and scoring uses only dictionary
-    # tables, so the precomputed complete alias_norm -> curie map
-    # replaces the old corpus-wide surface pass (a scan + distinct
-    # shuffle of EVERY surface string — the measured hot spot of this
-    # stage) AND the per-run map computation. Entries for aliases the
-    # corpus never mentions match no row below; corpus surfaces that
-    # are no alias get NULL — the unlinked side-channel — exactly as
-    # before. The map is dimension-sized: lazy-checkpoint once for the
-    # two broadcast builds below.
-    if "link_map" not in dims:
-        # dims from an older caller without the precomputed table:
-        # derive it the same dictionary-side way
-        all_alias_keys = (
-            dims["alias_map"].select(F.col("alias_norm").alias("surface_norm")).distinct()
-        )
-        dims = {**dims, "link_map": link_map(all_alias_keys, dims=dims)}
-    lm = dims["link_map"].localCheckpoint(eager=False)
-    lm = F.broadcast(lm)
+    # The map is dimension-sized: lazy-checkpoint once for the two
+    # broadcast builds below.
+    lm = F.broadcast(lmap.localCheckpoint(eager=False))
     t = triples.withColumn("s_norm", normalize_col(F.col("subject_surface"))).withColumn(
         "o_norm", normalize_col(F.col("object_surface"))
     )

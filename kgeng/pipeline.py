@@ -11,11 +11,13 @@ next stage — the
 distributed replacement for the reference's pickle-checkpointed
 multi-invocation flow (``Kuzu/kuzu_build_graph_csv.py:621-753``).
 
-Scale design notes (local[32] here, 1000 executors by intent):
+Scale design notes (measured at local[4] on a 4-vCPU host; written
+for many executors):
 - only (url, text) columns cross the Arrow boundary in the two UDF
   stages; everything else is JVM-side;
-- the alias dictionary is broadcast (reference holds the same data
-  in one heap);
+- the dictionary side is reduced to one winner map (alias -> curie)
+  and broadcast into the link join (the reference holds the same
+  data in one heap);
 - the per-edge source aggregation is two-phase with an explicit salt
   on the hub-skewed (subject, predicate, object) key, so one hot
   entity cannot pin a reducer (AQE skew-join stays on as backstop);
@@ -37,14 +39,12 @@ from kgeng.graph.build import reorder_categories
 from kgeng.io.lineage import LineageLog, fingerprint_paths
 from kgeng.io.scanmeta import parquet_rows, read_parquet
 from kgeng.io.sinks import write_partitioned
-from kgeng.link.candidates import build_link_dims, link_map, link_triples
+from kgeng.link.candidates import link_map, link_triples
 
 SALT_BUCKETS = 16
 MAX_PUBLICATIONS = 10
 # extract fan-out: tasks per core (see stage_extract_text)
 EXTRACT_WAVES = 3
-# the linking dim tables; link_map (last) is derived from the other four
-LINK_DIM_TABLES = ("alias_map", "idf", "ent", "labels", "link_map")
 
 
 class Pipeline:
@@ -115,36 +115,21 @@ class Pipeline:
         return self._stage("triples", [text_path], write)
 
     def stage_link_dims(self) -> str:
-        """Materialize the corpus-independent linking tables (alias
-        map, idf, entity weight maps, labels, winner map). Runs
-        concurrently with extraction — it only needs the dictionary."""
+        """Materialize the corpus-independent winner map ``link_map``
+        (every alias -> its curie). Runs concurrently with extraction —
+        it only needs the dictionary."""
 
         def write(out_path):
-            dims = build_link_dims(self._read(self.dict_path))
-            base_tables = LINK_DIM_TABLES[:-1]
-            rows = sum(self._write(dims[n], f"{out_path}/{n}") for n in base_tables)
-            # the winner map's lineage spans every base dim; built from
-            # the in-memory dims dict it would RE-EXECUTE the
-            # alias/idf/ent computations just written above (no plan
-            # reuse across references — the CLAUDE.md trap), queued
-            # behind extraction on this side thread. The base tables are
-            # already on disk: derive it from the read-back snapshots
-            # instead, zero recompute.
-            base = {n: self._read(f"{out_path}/{n}") for n in base_tables}
-            keys = base["alias_map"].select(F.col("alias_norm").alias("surface_norm")).distinct()
-            rows += self._write(link_map(keys, dims=base), f"{out_path}/link_map")
-            return {"rows": rows}
+            lmap = link_map(self._read(self.dict_path))
+            return {"rows": self._write(lmap, f"{out_path}/link_map")}
 
         return self._stage("link_dims", [self.dict_path], write)
 
     def stage_link(self, triples_path: str, dims_path: str) -> str:
         def write(out_path):
-            triples = self._read(triples_path)
-            dims = {
-                name: self._read(f"{dims_path}/{name}")
-                for name in LINK_DIM_TABLES
-            }
-            linked, unlinked = link_triples(triples, dims=dims)
+            linked, unlinked = link_triples(
+                self._read(triples_path), self._read(f"{dims_path}/link_map")
+            )
             # persist the miss side-channel next to the stage output
             write_partitioned(unlinked, f"{self.out}/link_misses")
             return {"rows": self._write(linked, out_path)}
@@ -311,7 +296,7 @@ class Pipeline:
         import threading
 
         t0 = time.time()
-        # dictionary-side prep (CC canonical map + linking dims) is
+        # dictionary-side prep (link winner map + CC canonical map) is
         # independent of the pages corpus — overlap it with extraction.
         # Spark schedules jobs from both threads concurrently (FIFO
         # across free task slots).

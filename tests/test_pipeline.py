@@ -15,7 +15,7 @@ from pyspark.sql.types import MapType
 from kgeng import fixtures
 from kgeng.link.candidates import link_map
 from kgeng.pipeline import run_pipeline
-from tests.conftest import FIX_DIR, codegen_compiles
+from tests.conftest import FIX_DIR, codegen_compiles, spark_jobs
 
 N_PAGES = 1000
 
@@ -72,7 +72,7 @@ def test_link_triples_miss_side_channel_survives_prefilter(spark, inputs):
         "url: string, sentence_idx: int, subject_surface: string, "
         "predicate: string, object_surface: string",
     )
-    linked, unlinked = link_triples(triples, dictionary)
+    linked, unlinked = link_triples(triples, link_map(dictionary))
     got_linked = {(r["url"], r["subject_curie"], r["object_curie"]) for r in linked.collect()}
     got_miss = {(r["url"], r["object_surface"]) for r in unlinked.collect()}
     assert got_linked == {("u1", fixtures.entity_curie(0), fixtures.entity_curie(5))}
@@ -82,11 +82,9 @@ def test_link_triples_miss_side_channel_survives_prefilter(spark, inputs):
 def test_ambiguous_surface_links_to_label_owner(spark, inputs):
     _pages, dic = inputs
     dictionary = spark.read.parquet(dic)
-    surfaces = spark.createDataFrame(
-        [(fixtures.entity_name(0).lower(),), (fixtures.entity_name(5).lower(),)],
-        "surface_norm: string",
-    )
-    got = {r["surface_norm"]: r["curie"] for r in link_map(surfaces, dictionary).collect()}
+    surfaces = [fixtures.entity_name(0).lower(), fixtures.entity_name(5).lower()]
+    lmap = link_map(dictionary).filter(F.col("surface_norm").isin(surfaces))
+    got = {r["surface_norm"]: r["curie"] for r in lmap.collect()}
     # entity 200 claims entity 0's name as an alias; exact-label bonus
     # + tf-idf must pick entity 0
     assert got[fixtures.entity_name(0).lower()] == fixtures.entity_curie(0)
@@ -167,10 +165,14 @@ def test_resume_recomputes_on_input_change(spark, inputs):
 
 
 def _content(spark, path):
-    """(row count, order-free xxhash64 sum) of a parquet dir. Maps are
+    """(row count, order-free xxhash64 sum) of a parquet dir."""
+    return _df_content(spark.read.parquet(path))
+
+
+def _df_content(df):
+    """(row count, order-free xxhash64 sum) of a DataFrame. Maps are
     hashed as their entry arrays; the sum is decimal because an int64
     sum overflows under ANSI."""
-    df = spark.read.parquet(path)
     cols = [
         F.map_entries(c) if isinstance(df.schema[c].dataType, MapType) else F.col(c)
         for c in df.columns
@@ -218,3 +220,24 @@ def test_one_lineage_commit_per_stage(pipeline_out):
         with open(os.path.join(lineage, f), encoding="utf-8") as fh:
             stages.append(json.load(fh)["stage"])
     assert sorted(stages) == sorted(pipeline_out["metrics"])
+
+
+def test_link_map_content_on_fixture_dictionary(spark, inputs):
+    _pages, dic = inputs
+    assert _df_content(link_map(spark.read.parquet(dic))) == (800, -128164811320867431930)
+
+
+def test_link_dims_writes_only_link_map_in_13_jobs(spark, inputs):
+    """A warm link_dims stage builds the winner map in one plan and
+    writes it as its only table: no intermediate tables written and
+    read back."""
+    from kgeng.pipeline import Pipeline
+
+    pages, dic = inputs
+    for name in ("kg_link_dims_warm", "kg_link_dims"):
+        out = os.path.join(FIX_DIR, name)
+        shutil.rmtree(out, ignore_errors=True)
+        with spark_jobs(spark) as jobs:
+            dims_path = Pipeline(spark, pages, dic, out).stage_link_dims()
+    assert jobs.n <= 13, jobs.n
+    assert os.listdir(dims_path) == ["link_map"]
