@@ -10,8 +10,8 @@ MemGraph / Apache AGE) as an idiomatic Spark DataFrame pipeline:
 - ``kgeng.queries``  — the read-side query corpus documented in the
   reference's Cypher command files, as DataFrame functions + ANSI-SQL
   oracles.
-- ``kgeng.extract``  — html→text, triple extraction, mention
-  detection (Arrow/pandas UDFs, batched — no per-row Python).
+- ``kgeng.extract``  — html→text and triple extraction (Arrow/pandas
+  UDFs, batched — no per-row Python).
 - ``kgeng.link``     — TF-IDF cosine candidate ranking for entity
   linking.
 - ``kgeng.canon``    — connected components (large-star/small-star)

@@ -70,10 +70,8 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 # of which costs several shuffles, an eager checkpoint and a
 # convergence collect — pure stage overhead when the input is
 # dimension-sized (the 400-entity bench dictionary spent 4-7 s here).
-# Same bounded-collect pattern as the alias-trie MAX_COLLECTED_ALIASES
-# switch (kgeng/extract/mentions.py); above the gate the distributed
-# large-star/small-star path runs unchanged, so a billion-entity
-# dictionary never touches the driver.
+# Above the gate the distributed large-star/small-star path runs
+# unchanged, so a billion-entity dictionary never touches the driver.
 SMALL_CC_EDGES = 1 << 17
 
 

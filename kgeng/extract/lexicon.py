@@ -15,5 +15,3 @@ PREDICATE_LEXICON: list[tuple[str, str]] = [
     ("prevents", "biolink:prevents"),
     ("binds to", "biolink:binds"),
 ]
-
-VERB_TO_PREDICATE: dict[str, str] = dict(PREDICATE_LEXICON)

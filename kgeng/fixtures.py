@@ -68,7 +68,7 @@ def entity_name(k: int) -> str:
 
 
 def entity_aliases(k: int) -> list[str]:
-    """Surface forms for mention detection / linking (case flip,
+    """Surface forms for linking (case flip,
     plural; entities 200-209 additionally claim the NAME of entity
     k-200 — an ambiguous surface the linker must resolve by the
     exact-label bonus + TF-IDF rank)."""

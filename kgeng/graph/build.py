@@ -209,20 +209,14 @@ def predicate_class_pairs(resolved_edges: DataFrame) -> DataFrame:
     )
 
 
-def assign_edge_ids(edges: DataFrame, stable: bool = True) -> DataFrame:
+def assign_edge_ids(edges: DataFrame) -> DataFrame:
     """O2 — edge-id assignment.
 
     The reference uses a sequential counter
     (``MemGraph/mg_build_merge_json.py:157``) — inherently
-    single-process. Distributed replacements:
-
-    - ``stable=True``: content hash (xxhash64 of the identifying
-      columns) — deterministic across runs and cluster sizes, which
-      the resume protocol needs.
-    - ``stable=False``: ``monotonically_increasing_id`` — cheapest,
-      unique within a run only.
+    single-process. The distributed replacement is a content hash
+    (xxhash64 of the identifying columns): deterministic across runs
+    and cluster sizes, which the resume protocol needs.
     """
-    if stable:
-        ident = [c for c in ("subject", "predicate", "object", "primary_knowledge_source") if c in edges.columns]
-        return edges.withColumn("id", F.xxhash64(*ident))
-    return edges.withColumn("id", F.monotonically_increasing_id())
+    ident = [c for c in ("subject", "predicate", "object", "primary_knowledge_source") if c in edges.columns]
+    return edges.withColumn("id", F.xxhash64(*ident))

@@ -7,9 +7,8 @@ reference's "danger zone" Cypher (``docs/cypher-cmds.txt:108-115``):
   → :func:`degree0_nodes` + :func:`detach_delete`
 
 A delete against immutable columnar storage is a REWRITE: anti-join
-the victims out and commit a new snapshot (on Iceberg this is a
-copy-on-write DELETE producing a new table snapshot; parquet dirs are
-the sandbox backend). :func:`run_degree0_delete` materializes the
+the victims out and write the survivors as a new parquet snapshot.
+:func:`run_degree0_delete` materializes the
 rewrite with a lineage row, so a re-run against unchanged input skips
 recomputation — the same resume protocol every pipeline stage uses.
 """
@@ -79,13 +78,15 @@ def run_degree0_delete(
 ) -> dict:
     """Materialize the degree-0 detach-delete as a new snapshot under
     ``out_dir`` with a lineage commit. Re-running against the same
-    input fingerprint returns the committed record without touching
+    input fingerprint, while ``out_dir``'s nodes and edges are still
+    the ones committed, returns the committed record without touching
     Spark — resume safety."""
     from kgeng.io.lineage import LineageLog, fingerprint_paths
 
     log = LineageLog(out_dir)
     fp = fingerprint_paths(nodes_path, edges_path, extra=f"degree0:{limit}")
-    prior = log.committed("degree0_delete", fp)
+    outputs = [f"{out_dir}/nodes", f"{out_dir}/edges"]
+    prior = log.committed("degree0_delete", fp, outputs)
     if prior is not None:
         return prior
 
@@ -103,6 +104,7 @@ def run_degree0_delete(
         "degree0_delete",
         fp,
         row_count=n_nodes,
+        outputs=outputs,
         metrics={
             "n_nodes_before": n_nodes_before,
             "n_edges_before": n_edges_before,
@@ -124,8 +126,7 @@ def upsert_nodes(
     cell in the delta means "keep the snapshot's value" (per-column
     coalesce), so partial deltas work.
 
-    On Iceberg this is the copy-on-write MERGE INTO producing a new
-    snapshot; the sandbox backend rewrites the parquet dir (the same
+    A materializing caller rewrites the parquet dir (the same
     rewrite-as-delete protocol as :func:`run_degree0_delete`).
 
     Scale shape: a full-outer shuffle join on the node id — MERGE

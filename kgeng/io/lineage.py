@@ -3,14 +3,17 @@
 The reference checkpoints its stages as pickle files and re-runs
 stages manually (``Kuzu/kuzu_build_graph_csv.py:674-731``). Here every
 pipeline stage commits one lineage record — stage name, input
-fingerprint, row count, metrics — after all of its outputs are on
-disk; a re-run consults the log and skips any stage whose fingerprint
-already committed, resuming from the last snapshot without
+fingerprint, output fingerprint, row count, metrics — after all of its
+outputs are on disk; a re-run consults the log and skips any stage
+whose input fingerprint already committed AND whose outputs still hold
+what that commit wrote, resuming from the last snapshot without
 recomputation (BASELINE.json north_star).
 
 One tiny JSON file per commit under ``<out>/_lineage/``, written
-atomically via rename: like a Delta Lake log entry, one commit covers
-every file its stage wrote.
+atomically via rename: like a Delta Lake log entry, one commit names
+every file its stage wrote. A stage whose output dir was since
+rewritten (another input built into the same dir, a crashed later
+run) no longer matches its commit and runs again.
 """
 
 from __future__ import annotations
@@ -58,20 +61,33 @@ class LineageLog:
     def _path(self, stage: str, fingerprint: str) -> str:
         return os.path.join(self.dir, f"{stage}-{fingerprint}.json")
 
-    def committed(self, stage: str, fingerprint: str) -> dict | None:
+    def committed(self, stage: str, fingerprint: str, outputs: list[str]) -> dict | None:
+        """The commit of ``stage`` for input ``fingerprint``, if its
+        ``outputs`` still fingerprint as they did when it was made. A
+        commit without an output fingerprint never matches."""
         p = self._path(stage, fingerprint)
-        if os.path.exists(p):
-            with open(p, encoding="utf-8") as fh:
-                return json.load(fh)
-        return None
+        if not os.path.exists(p):
+            return None
+        with open(p, encoding="utf-8") as fh:
+            rec = json.load(fh)
+        if rec.get("output_fingerprint") != fingerprint_paths(*outputs):
+            return None
+        return rec
 
     def commit(
-        self, stage: str, fingerprint: str, row_count: int, metrics: dict | None = None
+        self,
+        stage: str,
+        fingerprint: str,
+        row_count: int,
+        *,
+        outputs: list[str],
+        metrics: dict | None = None,
     ) -> dict:
-        """Commit a stage whose outputs are already on disk."""
+        """Commit a stage whose ``outputs`` are already on disk."""
         rec = {
             "stage": stage,
             "input_fingerprint": fingerprint,
+            "output_fingerprint": fingerprint_paths(*outputs),
             "row_count": row_count,
             "metrics": metrics or {},
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),

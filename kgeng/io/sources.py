@@ -35,8 +35,7 @@ def read_kgx_csv(
     array cells become real arrays and float-string int cells coerce
     via the two-step cast. ``force_int32`` columns are narrowed to
     32-bit ints by NAME regardless of tag (the reference's chem
-    descriptor override; pass ``kgeng.schemas.NODE_INT32_COLS`` /
-    ``EDGE_INT32_COLS``)."""
+    descriptor override)."""
     schema, tags = read_typed_header_file(header_path, force_int32=force_int32)
     # int-tagged columns arrive as float-strings ("3.0") in the
     # reference's dumps — read them as strings and coerce after (the
@@ -120,7 +119,7 @@ def write_merged_json(
         F.col("category").alias("labels"),
         F.to_json(F.struct(*node_prop_cols)).alias("properties_json"),
     )
-    e = assign_edge_ids(edges, stable=True)
+    e = assign_edge_ids(edges)
     edge_prop_cols = [
         c for c in e.columns if c not in ("id", "subject", "object", "predicate")
     ]

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 
 def normalize_col(col):
-    """Spark twin of kgeng.extract.mentions.normalize_surface."""
+    """Collapse whitespace runs, trim and lower-case: the key both the
+    dictionary aliases and the corpus surfaces are joined on."""
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 

@@ -5,11 +5,11 @@
         --materialize--> nodes + edges tables
 
 Each stage is a separate snapshot: its output parquet tables + one
-lineage commit (input fingerprint, row count, metrics). A re-run
-fingerprints its inputs, finds the commit, and skips straight to the
-next stage — the
-distributed replacement for the reference's pickle-checkpointed
-multi-invocation flow (``Kuzu/kuzu_build_graph_csv.py:621-753``).
+lineage commit (input and output fingerprints, row count, metrics). A
+re-run fingerprints its inputs, finds the commit, checks that the
+outputs are still the ones it names, and skips straight to the next
+stage — the distributed replacement for the reference's
+pickle-checkpointed multi-invocation flow (``Kuzu/kuzu_build_graph_csv.py:621-753``).
 
 Scale design notes (measured at local[4] on a 4-vCPU host; written
 for many executors):
@@ -57,22 +57,28 @@ class Pipeline:
         self.metrics: dict[str, dict] = {}
 
     # -- stage runner -------------------------------------------------
-    def _stage(self, name: str, inputs: list[str], write) -> str:
+    def _stage(
+        self, name: str, inputs: list[str], write, outputs: list[str] | None = None
+    ) -> str:
         """Run one stage as one snapshot. ``write(out_path)`` puts every
         output of the stage on disk and returns its metrics (with
-        ``rows``); one lineage commit then covers all of them. A crash
-        inside ``write`` leaves the stage uncommitted, so the re-run
-        redoes the whole stage — safe, because every write overwrites."""
+        ``rows``); one lineage commit then covers all of them.
+        ``outputs`` lists every path ``write`` writes (default: the
+        stage's own dir); the stage is skipped only while they still
+        hold what its commit recorded. A crash inside ``write`` leaves
+        the stage uncommitted, so the re-run redoes the whole stage —
+        safe, because every write overwrites."""
         out_path = f"{self.out}/{name}"
+        outputs = outputs or [out_path]
         fp = fingerprint_paths(*inputs, extra=name)
-        prior = self.log.committed(name, fp)
+        prior = self.log.committed(name, fp, outputs)
         if prior is not None:
             self.metrics[name] = {"skipped": True, **prior["metrics"]}
             return out_path
         t0 = time.time()
         m = write(out_path)
         m["seconds"] = round(time.time() - t0, 3)
-        self.log.commit(name, fp, m["rows"], metrics=m)
+        self.log.commit(name, fp, m["rows"], outputs=outputs, metrics=m)
         self.metrics[name] = {"skipped": False, **m}
         return out_path
 
@@ -134,7 +140,8 @@ class Pipeline:
             write_partitioned(unlinked, f"{self.out}/link_misses")
             return {"rows": self._write(linked, out_path)}
 
-        return self._stage("link", [triples_path, dims_path], write)
+        outputs = [f"{self.out}/link", f"{self.out}/link_misses"]
+        return self._stage("link", [triples_path, dims_path], write, outputs)
 
     def stage_canon_map(self) -> str:
         """Materialize the canonical map once (CC over the dictionary);
@@ -207,7 +214,7 @@ class Pipeline:
             )
             return {"rows": n_nodes + n_edges, "nodes": n_nodes, "edges": n_edges}
 
-        self._stage("materialize", [canon_path, self.dict_path], write)
+        self._stage("materialize", [canon_path, self.dict_path], write, [edges_out, nodes_out])
         return nodes_out, edges_out
 
     def _build_edges(self, triples: DataFrame) -> DataFrame:

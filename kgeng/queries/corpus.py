@@ -20,7 +20,6 @@ from kgeng.graph.build import node_class_lookup, reorder_categories
 from kgeng.graph.kgview import kg_edges, kg_nodes, read_table
 
 POINT_ID = "CUST:42"
-ONE_HOP_ID = "CUST:1"
 TARGET_BRAND = "BRND:Brand#13"
 
 

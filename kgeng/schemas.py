@@ -1,5 +1,4 @@
-"""Schemas for every table the engine touches, plus the typed-header
-schema reader.
+"""The typed-header schema reader.
 
 The reference declares schema out-of-band in a tab-delimited typed
 header file, one ``name:type`` token per column (parsing behavior at
@@ -15,80 +14,6 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# Target graph schema (BASELINE.json north_star: id, category, predicate,
-# subject/object curies, properties map)
-# ---------------------------------------------------------------------------
-
-NODES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),  # CURIE
-        T.StructField("name", T.StringType(), True),
-        T.StructField("category", T.ArrayType(T.StringType()), True),
-        T.StructField("equivalent_identifiers", T.ArrayType(T.StringType()), True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("properties", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-EDGES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("subject", T.StringType(), False),  # CURIE
-        T.StructField("predicate", T.StringType(), False),  # biolink CURIE
-        T.StructField("object", T.StringType(), False),  # CURIE
-        T.StructField("primary_knowledge_source", T.StringType(), True),
-        T.StructField("publications", T.ArrayType(T.StringType()), True),
-        T.StructField("properties", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Pipeline-input schema (BASELINE.json input_hint)
-# ---------------------------------------------------------------------------
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-TRIPLES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("subject_surface", T.StringType(), False),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("object_surface", T.StringType(), False),
-        T.StructField("sentence_idx", T.IntegerType(), True),
-    ]
-)
-
-MENTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("curie", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), True),
-        T.StructField("end", T.IntegerType(), True),
-    ]
-)
-
-DICTIONARY_SCHEMA = T.StructType(
-    [
-        T.StructField("curie", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("aliases", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Typed-header parsing (reference S4)
-# ---------------------------------------------------------------------------
 
 # Header type tag -> Spark type. The reference maps `float` to a lossy
 # 32-bit FLOAT (kuzu_build_graph_csv.py:523); we widen to double.
@@ -112,16 +37,6 @@ _TYPE_MAP: dict[str, T.DataType] = {
 
 ARRAY_TAGS = {"float[]", "string[]", "label"}
 
-# Columns the reference forces to int32 BY NAME, independent of the
-# header tag (chem descriptors on nodes, one edge column —
-# Kuzu/kuzu_build_graph_csv.py:109-110,122). The typed-header scan
-# applies the same override when given these lists.
-NODE_INT32_COLS: list[str] = [
-    "lipinski", "arom_c", "sp3_c", "sp2_c", "sp_c", "halogen",
-    "hetero_sp2_c", "rotb", "o_n", "oh_nh", "rgb", "fda_labels",
-]
-EDGE_INT32_COLS: list[str] = ["distance_to_feature"]
-
 
 def sanitize_column_name(name: str) -> str:
     """Column-name sanitization, same contract as the reference
@@ -139,8 +54,8 @@ def parse_typed_header(
     ``force_int32`` narrows the named columns to 32-bit ints REGARDLESS
     of their header tag — the reference's by-name ``astype('int32')``
     override for the chem-descriptor columns
-    (``Kuzu/kuzu_build_graph_csv.py:109-110,122``); pass
-    ``NODE_INT32_COLS`` / ``EDGE_INT32_COLS`` for parity.
+    (``Kuzu/kuzu_build_graph_csv.py:109-110,122``; the column lists
+    are in SURVEY.md).
 
     Unknown tags raise immediately — the reference instead emits a
     poison ``"ERROR: No data type recognised"`` DDL string

@@ -32,7 +32,7 @@ def get_spark(
     comparable with the DuckDB oracle.
 
     ``master`` defaults to ``local[cpus]``; pass e.g.
-    ``local-cluster[4,8,8192]`` for a multi-executor-JVM run — the
+    ``local-cluster[2,2,1536]`` for a multi-executor-JVM run — the
     kgeng zip (built on demand) ships to executors via
     ``spark.submit.pyFiles``, same as a real ``spark-submit
     --py-files`` deployment.
@@ -109,9 +109,6 @@ def get_spark(
     if master.startswith("local-cluster"):
         kgeng_path = build_zip()
         builder = builder.config("spark.submit.pyFiles", kgeng_path)
-        builder = builder.config(
-            "spark.executor.memory", os.environ.get("KGENG_EXECUTOR_MEM", "5g")
-        )
     builder = builder.config("spark.executorEnv.PYTHONPATH", kgeng_path)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -79,53 +79,6 @@ def streaming_user_totals(spark: SparkSession, events_dir: str) -> DataFrame:
     )
 
 
-def streaming_user_totals_tws(spark: SparkSession, events_dir: str) -> DataFrame:
-    """The same per-user accumulator on Spark 4's successor stateful
-    API, ``transformWithStateInPandas`` (StatefulProcessor + typed
-    value state): schema-evolvable state, composite state types, and
-    timers — what new stateful operators should target; the
-    ``applyInPandasWithState`` twin above stays as the stable-API
-    form.
-
-    Runtime requirements the parity test gates on: the ``protobuf``
-    package (the TWS state protocol serializes through
-    ``StateMessage_pb2`` — absent in this sandbox, so the test skips)
-    and the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``)."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prior = self._totals.get()
-            n, total = prior if prior is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    stream = _event_stream(spark, events_dir)
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TotalsProcessor(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_sessions(
     spark: SparkSession,
     events_dir: str,

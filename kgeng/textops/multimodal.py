@@ -1,12 +1,11 @@
 """Multimodal column handling: opaque ``binary`` payloads + typed
-metadata, with decode/feature-extraction as Arrow-batched UDFs.
+metadata, with feature extraction as Arrow-batched UDFs.
 
-The container has no image/audio codecs, so the decode kernel is
-STUBBED (``decode_image`` raises ``NotImplementedError``; the feature
-extractor uses a deterministic md5-derived fake) — but the Spark-side
-plumbing is real and tested: binary columns, schema, ``mapInPandas``
-batch shape, and partitioning are exactly what a libjpeg/ffmpeg-backed
-kernel would drop into.
+No image/audio codec is a dependency, so nothing here decodes pixels:
+the feature extractor is a deterministic md5-derived stand-in. The
+Spark-side plumbing is real and tested: binary columns, schema,
+``mapInPandas`` batch shape, and partitioning are exactly what a
+libjpeg/ffmpeg-backed kernel would drop into.
 
 The ``media`` corpus is derived deterministically from ``documents``
 (payload = utf-8 bytes of the text), so metadata ops have a DuckDB
@@ -26,7 +25,6 @@ from kgeng.io.scanmeta import read_parquet
 
 FEATURE_DIM = 8
 
-MEDIA_SCHEMA = "doc_id bigint, payload binary, mime string"
 FEATURES_SCHEMA = "doc_id bigint, n_bytes int, feature array<float>"
 
 
@@ -37,15 +35,6 @@ def media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.encode(F.col("text"), "utf-8").alias("payload"),
         F.concat(F.lit("image/"), F.col("source")).alias("mime"),
-    )
-
-
-def decode_image(payload: bytes):  # pragma: no cover - documented stub
-    """Decode stub: a real deployment plugs PIL/libjpeg here. The
-    container ships no codecs, so this fails loudly instead of faking
-    pixel data."""
-    raise NotImplementedError(
-        "image decode requires a codec library not present in this environment"
     )
 
 

@@ -19,7 +19,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _SCRIPT = """
 import os, sys
 sys.path.insert(0, %(repo)r)
-os.environ["KGENG_EXECUTOR_MEM"] = "1g"
 from kgeng.session import get_spark
 from pyspark.sql import functions as F
 import kgeng.fixtures as fx

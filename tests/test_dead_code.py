@@ -1,7 +1,8 @@
-"""Every top-level function and class under kgeng/ is named somewhere
-outside its own definition: in code (a call, an import, an attribute,
-a re-export) of any .py file in the checkout. Parsed with ``ast``, so
-a mention in a comment or docstring does not count."""
+"""Every top-level function, class and assigned name (dunders such as
+``__version__`` aside) under kgeng/ is named somewhere outside its own
+definition: in code (a call, an import, an attribute, a re-export) of
+any .py file in the checkout. Parsed with ``ast``, so a mention in a
+comment or docstring does not count."""
 
 from __future__ import annotations
 
@@ -34,6 +35,19 @@ def _names(node: ast.AST, skip: range | None = None):
             yield n.name.rsplit(".", 1)[-1]
 
 
+def _defined(stmt: ast.stmt):
+    """Names a top-level statement defines: a def or class, or the
+    plain names an assignment binds (dunders excluded)."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        yield stmt.name
+    elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        for t in targets:
+            for n in ast.walk(t):
+                if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                    yield n.id
+
+
 def test_no_unreferenced_top_level_definitions():
     trees = {}
     for path in _py_files():
@@ -47,11 +61,10 @@ def test_no_unreferenced_top_level_definitions():
             continue
         elsewhere = set().union(*(n for p, n in names.items() if p != path))
         for d in tree.body:
-            if not isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            if d.name in elsewhere:
-                continue
-            own = range(d.lineno, d.end_lineno + 1)
-            if d.name not in set(_names(tree, skip=own)):
-                unused.append(f"{os.path.relpath(path, REPO)}:{d.lineno} {d.name}")
+            for name in _defined(d):
+                if name in elsewhere:
+                    continue
+                own = range(d.lineno, d.end_lineno + 1)
+                if name not in set(_names(tree, skip=own)):
+                    unused.append(f"{os.path.relpath(path, REPO)}:{d.lineno} {name}")
     assert unused == [], unused

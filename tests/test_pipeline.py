@@ -164,6 +164,45 @@ def test_resume_recomputes_on_input_change(spark, inputs):
     assert not r2["metrics"]["extract_text"]["skipped"]
 
 
+def test_resume_rebuilds_what_another_input_overwrote(spark, inputs):
+    """Build corpus A, then B, then A again into one dir. B rewrote
+    every corpus-side output, so the third run must redo those stages
+    (the dictionary-side ones still hold what they committed) and end
+    with A's KG, not serve B's."""
+    _pages, dic = inputs
+    pages_a = os.path.join(FIX_DIR, "pages_a.parquet")
+    pages_b = os.path.join(FIX_DIR, "pages_b.parquet")
+    fixtures.write_pages(pages_a, 150)
+    fixtures.write_pages(pages_b, 100)
+    out = os.path.join(FIX_DIR, "kg_out_shared")
+    shutil.rmtree(out, ignore_errors=True)
+    run_pipeline(spark, pages_a, dic, out)
+    fresh_a = _content(spark, f"{out}/edges")
+    run_pipeline(spark, pages_b, dic, out)
+    assert _content(spark, f"{out}/edges") != fresh_a
+    result = run_pipeline(spark, pages_a, dic, out)
+    ran = sorted(k for k, v in result["metrics"].items() if not v["skipped"])
+    assert ran == ["canon", "extract_text", "link", "materialize", "triples"]
+    assert _content(spark, f"{out}/edges") == fresh_a
+
+
+def test_lineage_commit_matches_only_its_own_outputs(tmp_path):
+    from kgeng.io.lineage import LineageLog
+
+    table = tmp_path / "table"
+    table.mkdir()
+    (table / "part-0.parquet").write_bytes(b"a")
+    log = LineageLog(str(tmp_path))
+    log.commit("stage", "fp", 1, outputs=[str(table)])
+    assert log.committed("stage", "fp", [str(table)])["row_count"] == 1
+    (table / "part-0.parquet").write_bytes(b"bb")
+    assert log.committed("stage", "fp", [str(table)]) is None
+    # a commit written without an output fingerprint runs once more
+    with open(log._path("stage", "old"), "w", encoding="utf-8") as fh:
+        json.dump({"stage": "stage", "input_fingerprint": "old", "metrics": {}}, fh)
+    assert log.committed("stage", "old", [str(table)]) is None
+
+
 def _content(spark, path):
     """(row count, order-free xxhash64 sum) of a parquet dir."""
     return _df_content(spark.read.parquet(path))
