@@ -9,7 +9,7 @@ becomes the canonical id.
 This is a driver-side loop of joins — no Catalyst rule can express
 iteration — so each round materializes via ``localCheckpoint`` to cut
 lineage (SURVEY.md §4 custom-work item 3). Convergence is detected by
-edge-set stability (count + checksum), bounded by ``max_iter``.
+edge-set stability (count + checksum), bounded by ``CC_MAX_ROUNDS``.
 
 Ids are compared with min(); any totally ordered id type works.
 """
@@ -73,6 +73,8 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 # Above the gate the distributed large-star/small-star path runs
 # unchanged, so a billion-entity dictionary never touches the driver.
 SMALL_CC_EDGES = 1 << 17
+# star rounds are O(log n); a run that needs more has a bug
+CC_MAX_ROUNDS = 25
 
 
 def _driver_cc(cur: DataFrame) -> DataFrame:
@@ -109,7 +111,7 @@ def _driver_cc(cur: DataFrame) -> DataFrame:
     return cur.sparkSession.createDataFrame(rows, schema)
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(u, v) -> assignments(id, component) where component is the
     minimum id reachable; every id appearing in edges is assigned."""
     all_nodes = (
@@ -124,14 +126,14 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         # replaces the whole star-round loop (identical assignments)
         return _driver_cc(cur)
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         sig = _signature(cur)
         if sig == prev_sig:
             break
         prev_sig = sig
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ROUNDS} rounds")
     # at convergence every edge is (node -> component root)
     assign = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = all_nodes.join(assign, "id", "left_anti").select(

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import argparse
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -300,27 +301,24 @@ class Pipeline:
 
     # -- driver ---------------------------------------------------------
     def run(self) -> dict:
-        import threading
-
         t0 = time.time()
         # dictionary-side prep (link winner map + CC canonical map) is
         # independent of the pages corpus — overlap it with extraction.
         # Spark schedules jobs from both threads concurrently (FIFO
-        # across free task slots).
-        side: dict[str, str] = {}
+        # across free task slots). Leaving the ``with`` block waits for
+        # the side thread on every exit, so a failed run never returns
+        # while it still writes; ``result()`` re-raises its error.
+        def dict_side() -> tuple[str, str]:
+            return self.stage_link_dims(), self.stage_canon_map()
 
-        def dict_side():
-            side["dims"] = self.stage_link_dims()
-            side["cmap"] = self.stage_canon_map()
-
-        th = threading.Thread(target=dict_side, daemon=True)
-        th.start()
-        text_path = self.stage_extract_text()
-        triples_path = self.stage_triples(text_path)
-        th.join()
-        linked_path = self.stage_link(triples_path, side["dims"])
-        canon_path = self.stage_canon(linked_path, side["cmap"])
-        nodes_out, edges_out = self.stage_materialize(canon_path, side["cmap"])
+        with ThreadPoolExecutor(1) as side:
+            fut = side.submit(dict_side)
+            text_path = self.stage_extract_text()
+            triples_path = self.stage_triples(text_path)
+            dims_path, cmap_path = fut.result()
+        linked_path = self.stage_link(triples_path, dims_path)
+        canon_path = self.stage_canon(linked_path, cmap_path)
+        nodes_out, edges_out = self.stage_materialize(canon_path, cmap_path)
         return {
             "nodes": nodes_out,
             "edges": edges_out,

@@ -7,6 +7,8 @@ from contextlib import contextmanager
 from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -54,3 +56,45 @@ def spark_jobs(spark):
         sc._jsc.clearJobGroup()
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         count.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def py4j_commands(spark):
+    """Counts the py4j commands the driver sends to the JVM inside the
+    block, leaving out object-release commands (``m``), whose number
+    depends on when Python's garbage collector runs.
+
+        with py4j_commands(spark) as cmds:
+            df.select("a")
+        assert cmds.n <= 10
+    """
+    from py4j.clientserver import ClientServer, ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    if not isinstance(spark.sparkContext._gateway, ClientServer):
+        raise TypeError("py4j_commands counts pinned-thread (ClientServer) gateways only")
+    count = SimpleNamespace(n=0)
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            count.n += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
+
+
+def df_content(df):
+    """(row count, order-free xxhash64 sum) of a DataFrame. Maps are
+    hashed as their entry arrays; the sum is decimal because an int64
+    sum overflows under ANSI."""
+    cols = [
+        F.map_entries(c) if isinstance(df.schema[c].dataType, MapType) else F.col(c)
+        for c in df.columns
+    ]
+    row = df.select(F.count("*"), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).first()
+    return tuple(row)

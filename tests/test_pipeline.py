@@ -10,12 +10,11 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import MapType
 
 from kgeng import fixtures
 from kgeng.link.candidates import link_map
 from kgeng.pipeline import run_pipeline
-from tests.conftest import FIX_DIR, codegen_compiles, spark_jobs
+from tests.conftest import FIX_DIR, codegen_compiles, df_content, spark_jobs
 
 N_PAGES = 1000
 
@@ -205,19 +204,7 @@ def test_lineage_commit_matches_only_its_own_outputs(tmp_path):
 
 def _content(spark, path):
     """(row count, order-free xxhash64 sum) of a parquet dir."""
-    return _df_content(spark.read.parquet(path))
-
-
-def _df_content(df):
-    """(row count, order-free xxhash64 sum) of a DataFrame. Maps are
-    hashed as their entry arrays; the sum is decimal because an int64
-    sum overflows under ANSI."""
-    cols = [
-        F.map_entries(c) if isinstance(df.schema[c].dataType, MapType) else F.col(c)
-        for c in df.columns
-    ]
-    row = df.select(F.count("*"), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).first()
-    return tuple(row)
+    return df_content(spark.read.parquet(path))
 
 
 def test_materialize_crash_reruns_only_that_stage(spark, inputs, pipeline_out, monkeypatch):
@@ -263,7 +250,7 @@ def test_one_lineage_commit_per_stage(pipeline_out):
 
 def test_link_map_content_on_fixture_dictionary(spark, inputs):
     _pages, dic = inputs
-    assert _df_content(link_map(spark.read.parquet(dic))) == (800, -128164811320867431930)
+    assert df_content(link_map(spark.read.parquet(dic))) == (800, -128164811320867431930)
 
 
 def test_link_dims_writes_only_link_map_in_13_jobs(spark, inputs):
@@ -280,3 +267,81 @@ def test_link_dims_writes_only_link_map_in_13_jobs(spark, inputs):
             dims_path = Pipeline(spark, pages, dic, out).stage_link_dims()
     assert jobs.n <= 13, jobs.n
     assert os.listdir(dims_path) == ["link_map"]
+
+
+# stage -> (first path it writes, stages committed when it crashes in a
+# fresh build: the main thread stops at the crash, and the side thread
+# — link_dims then canon_map — always runs to its end or its own crash)
+CRASH_STAGES = {
+    "extract_text": ("extract_text", {"link_dims", "canon_map"}),
+    "triples": ("triples", {"extract_text", "link_dims", "canon_map"}),
+    "link_dims": ("link_dims/link_map", {"extract_text", "triples"}),
+    "canon_map": ("canon_map", {"extract_text", "triples", "link_dims"}),
+    "link": ("link_misses", {"extract_text", "triples", "link_dims", "canon_map"}),
+    "canon": ("canon", {"extract_text", "triples", "link_dims", "canon_map", "link"}),
+    "materialize": ("edges", {"extract_text", "triples", "link_dims", "canon_map", "link", "canon"}),
+}
+
+
+@pytest.fixture(scope="module")
+def crash_reference(spark, inputs):
+    """One 150-page corpus and its uninterrupted build's edges/nodes."""
+    _pages, dic = inputs
+    pages = os.path.join(FIX_DIR, "pages_crash.parquet")
+    fixtures.write_pages(pages, 150)
+    out = os.path.join(FIX_DIR, "kg_crash_reference")
+    shutil.rmtree(out, ignore_errors=True)
+    run_pipeline(spark, pages, dic, out)
+    return pages, {t: _content(spark, f"{out}/{t}") for t in ("edges", "nodes")}
+
+
+@pytest.mark.parametrize("point", ["before_write", "before_commit"])
+@pytest.mark.parametrize("stage", list(CRASH_STAGES))
+def test_crash_then_resume_matches_uninterrupted_build(
+    spark, inputs, crash_reference, monkeypatch, stage, point
+):
+    """A fresh build crashes in ``stage``, either before its first
+    write or after its writes but before its commit. The crash
+    surfaces as the injected error (a side-thread crash too), leaves
+    ``stage`` uncommitted and lets the side thread finish; a clean
+    re-run redoes exactly the uncommitted stages and ends with the
+    uninterrupted build's edges and nodes."""
+    import kgeng.pipeline
+    from kgeng.io.lineage import LineageLog
+
+    _pages, dic = inputs
+    pages, reference = crash_reference
+    out = os.path.join(FIX_DIR, f"kg_crash_{stage}_{point}")
+    shutil.rmtree(out, ignore_errors=True)
+    first_write, committed = CRASH_STAGES[stage]
+
+    with monkeypatch.context() as m:
+        if point == "before_write":
+            write = kgeng.pipeline.write_partitioned
+
+            def crash_write(df, path, **kw):
+                if path == f"{out}/{first_write}":
+                    raise RuntimeError(f"injected crash before the {stage} write")
+                return write(df, path, **kw)
+
+            m.setattr(kgeng.pipeline, "write_partitioned", crash_write)
+        else:
+            commit = LineageLog.commit
+
+            def crash_commit(self, name, *args, **kw):
+                if name == stage:
+                    raise RuntimeError(f"injected crash before the {stage} commit")
+                return commit(self, name, *args, **kw)
+
+            m.setattr(LineageLog, "commit", crash_commit)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(spark, pages, dic, out)
+    assert os.path.exists(f"{out}/{first_write}") == (point == "before_commit")
+    logged = {f.rsplit("-", 1)[0] for f in os.listdir(f"{out}/_lineage")}  # <stage>-<fp>.json
+    assert logged == committed
+
+    result = run_pipeline(spark, pages, dic, out)
+    ran = {k for k, v in result["metrics"].items() if not v["skipped"]}
+    assert ran == set(CRASH_STAGES) - committed
+    assert {t: _content(spark, f"{out}/{t}") for t in ("edges", "nodes")} == reference
+    shutil.rmtree(out)
